@@ -12,7 +12,9 @@ per registered query:
 "Latest driver round" folds every CORRECTNESS_r*.json in round order;
 status is `hash` (hash_match true), `rows` (clean rows-only /
 `no_oracle`), or the recorded err string. Regenerate after any
-registration change::
+registration change, and after any edit that moves a registered
+query's ``@query`` line (the source column is ``file:line``, so a
+line shift anywhere above a decorator stales the index)::
 
     python tools/registry_index.py          # rewrites REGISTRY_INDEX.md
     python tools/registry_index.py --check  # exit 1 if file is stale
