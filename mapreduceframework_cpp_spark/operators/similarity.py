@@ -32,69 +32,7 @@ def _dot(a, b):
     )
 
 
-def _dot_terms(fa, fb, dim: int):
-    """Unrolled dot-product skeleton for a statically known element
-    count: ``lit(0.0) + fa(0)*fb(0) + ... + fa(dim-1)*fb(dim-1)``.
-
-    Why it exists: ``aggregate``/``zip_with`` are CodegenFallback
-    expressions — every evaluation is an interpreted per-element fold
-    with lambda-variable binding, and the similarity operators evaluate
-    the dot inside PAIR-join conditions (O(n·m) calls), where the
-    interpreter cost dominates the whole query. The unrolled form is
-    plain GetArrayItem/Multiply/Add nodes that whole-stage codegen
-    compiles to straight-line JVM arithmetic (guide §1.2 "per-task
-    work").
-
-    Bit-identity: the Add chain associates left-to-right from the same
-    0.0 seed, which IS the fold order of ``aggregate`` — identical
-    IEEE-754 result, term for term. Null semantics match too (a null
-    array or null element nulls the sum in both forms). The ONE
-    divergence is arrays whose length differs from ``dim``: the HOF
-    pads/extends, the unrolled form indexes — so callers opt in only
-    under a fixed-width contract (the embeddings table is
-    array<float>[64] at every SF — FIXTURES.md; verified no
-    null/short/long rows).
-
-    CRITICAL usage rule (measured, r14): the per-term columns must
-    index ATTRIBUTES (materialized columns) or the raw scan column with
-    an inline element cast — NEVER an array built by a HOF (e.g. the
-    ``transform``-cast ``_v``) in the same projection chain.
-    CollapseProject inlines such an array into every one of the
-    ``2*dim`` term references, and because HOFs are CodegenFallback
-    they are re-evaluated per reference — an A/B showed 3-8x
-    REGRESSION before this rule, 2-7x improvement after."""
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + (fa(i) * fb(i))
-    return acc
-
-
-def _dot_fixed(a, b, dim: int):
-    """Unrolled :func:`_dot` over two already-double array columns
-    (attributes across a join/exchange boundary — see the usage rule
-    on :func:`_dot_terms`)."""
-    return _dot_terms(lambda i: a[i], lambda i: b[i], dim)
-
-
-def _dot_at(a, b, dim: int | None):
-    """``_dot_fixed`` when the caller declares a fixed width, else the
-    generic HOF fold."""
-    return _dot(a, b) if dim is None else _dot_fixed(a, b, dim)
-
-
-def _sq_norm_raw(raw, dim: int):
-    """Unrolled ``dot(_v, _v)`` computed from the RAW (float) array
-    column with inline element casts: ``cast(raw[i]) * cast(raw[i])``
-    is bit-identical to ``transform(raw, cast)[i] * ...`` but keeps
-    the HOF out of the expression tree (usage rule above)."""
-    return _dot_terms(
-        lambda i: raw[i].cast("double"), lambda i: raw[i].cast("double"), dim
-    )
-
-
-def with_norm(
-    emb: DataFrame, vec_col: str = "embedding", dim: int | None = None
-) -> DataFrame:
+def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Attach the double-cast vector and its L2 norm, EXCLUDING
     zero-norm rows: cosine similarity is undefined for the zero vector,
     and a 100 TB embedding table always contains some (failed encoder
@@ -104,16 +42,9 @@ def with_norm(
     here, so the exclusion is uniform on both query and candidate
     sides; the SQL oracles carry the same ``> 0`` norm guard."""
     v = _as_double(F.col(vec_col))
-    norm = F.sqrt(
-        _dot(F.col("_v"), F.col("_v"))
-        if dim is None
-        # norm from the RAW column, not _v: indexing the transform-built
-        # _v would inline the HOF into all 2*dim terms (see _dot_terms)
-        else _sq_norm_raw(F.col(vec_col), dim)
-    )
     return (
         emb.withColumn("_v", v)
-        .withColumn("_norm", norm)
+        .withColumn("_norm", F.sqrt(_dot(F.col("_v"), F.col("_v"))))
         .filter(F.col("_norm") > 0)
     )
 
@@ -124,16 +55,15 @@ def cosine_topk(
     k: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query vector (brute force).
     Output: query_id, cand_id, cos_sim (rounded 6dp), rank."""
-    q = with_norm(queries, vec_col, dim).select(
+    q = with_norm(queries, vec_col).select(
         F.col(id_col).alias("query_id"),
         F.col("_v").alias("_qv"),
         F.col("_norm").alias("_qn"),
     )
-    c = with_norm(spread(candidates, id_col), vec_col, dim).select(
+    c = with_norm(spread(candidates, id_col), vec_col).select(
         F.col(id_col).alias("cand_id"),
         F.col("_v").alias("_cv"),
         F.col("_norm").alias("_cn"),
@@ -142,9 +72,7 @@ def cosine_topk(
         F.broadcast(q)
         .join(c, F.col("query_id") != F.col("cand_id"))
         .withColumn(
-            "_cos",
-            _dot_at(F.col("_qv"), F.col("_cv"), dim)
-            / (F.col("_qn") * F.col("_cn")),
+            "_cos", _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("cand_id"))
@@ -167,24 +95,13 @@ def sign_lsh_buckets(
     """Attach a sign-LSH bucket id: bit j = sign(v · plane_j). Planes are
     deterministic (seeded) literal arrays — evaluated JVM-side."""
     planes = _hyperplanes(dim, n_planes, seed)
+    withv = emb.withColumn("_v", _as_double(F.col(vec_col)))
     bucket = None
     for j, plane in enumerate(planes):
-        # plane entries as scalar literals against the RAW column with
-        # inline element casts (see _dot_terms' usage rule): identical
-        # values to the former zip_with fold over the transform-cast _v
-        # (transform(x, cast)[i] == cast(x[i]); array-literal indexing
-        # constant-folds to the same scalars)
-        bit = F.when(
-            _dot_terms(
-                lambda i: F.col(vec_col)[i].cast("double"),
-                lambda i, _p=plane: F.lit(_p[i]),
-                dim,
-            )
-            > 0,
-            F.shiftleft(F.lit(1), j),
-        ).otherwise(0)
+        lit_plane = F.array(*[F.lit(x) for x in plane])
+        bit = F.when(_dot(F.col("_v"), lit_plane) > 0, F.shiftleft(F.lit(1), j)).otherwise(0)
         bucket = bit if bucket is None else bucket.bitwiseOR(bit)
-    return emb.withColumn("bucket", bucket)
+    return withv.withColumn("bucket", bucket).drop("_v")
 
 
 def lsh_topk(
@@ -207,11 +124,11 @@ def lsh_topk(
             *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)],
         )
         qb = qb.withColumn("bucket", F.explode(probes))
-    q = with_norm(qb, vec_col, dim).select(
+    q = with_norm(qb, vec_col).select(
         F.col(id_col).alias("query_id"), "bucket",
         F.col("_v").alias("_qv"), F.col("_norm").alias("_qn"),
     )
-    c = with_norm(cb, vec_col, dim).select(
+    c = with_norm(cb, vec_col).select(
         F.col(id_col).alias("cand_id"), "bucket",
         F.col("_v").alias("_cv"), F.col("_norm").alias("_cn"),
     )
@@ -219,9 +136,7 @@ def lsh_topk(
         q.join(c, "bucket")
         .filter(F.col("query_id") != F.col("cand_id"))
         .withColumn(
-            "_cos",
-            _dot_fixed(F.col("_qv"), F.col("_cv"), dim)
-            / (F.col("_qn") * F.col("_cn")),
+            "_cos", _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
         )
         .select("query_id", "cand_id", "_cos")
         .distinct()  # multiprobe can reach the same pair via several buckets
@@ -244,7 +159,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     max_iter: int = 10,
-    dim: int | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: k-means partitions the
     corpus into ``n_cells`` Voronoi cells; each query scores only the
@@ -286,30 +200,20 @@ def ivf_topk(
     withq = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias(vec_col)
     ).withColumn("_v", _as_double(F.col(vec_col)))
-    def _d2(c):
-        # squared distance to a literal center: unrolled over the RAW
-        # column with inline casts when dim is fixed (same fold order:
-        # acc + (x-y)*(x-y), left to right — see _dot_terms), else the
-        # generic HOF fold over the transform-cast _v
-        if dim is None:
-            return F.aggregate(
-                F.zip_with(
-                    F.col("_v"),
-                    F.array(*[F.lit(x) for x in c]),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        acc = F.lit(0.0)
-        for i in range(dim):
-            t = F.col(vec_col)[i].cast("double") - F.lit(c[i])
-            acc = acc + t * t
-        return acc
-
     cell_d2 = F.array(
         *[
-            F.struct(_d2(c).alias("d2"), F.lit(i).alias("cell"))
+            F.struct(
+                F.aggregate(
+                    F.zip_with(
+                        F.col("_v"),
+                        F.array(*[F.lit(x) for x in c]),
+                        lambda x, y: (x - y) * (x - y),
+                    ),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ).alias("d2"),
+                F.lit(i).alias("cell"),
+            )
             for i, c in enumerate(centers)
         ]
     )
@@ -324,17 +228,13 @@ def ivf_topk(
             "query_id",
             "cell",
             F.col("_v").alias("_qv"),
-            F.sqrt(
-                _dot(F.col("_v"), F.col("_v"))
-                if dim is None
-                else _sq_norm_raw(F.col(vec_col), dim)
-            ).alias("_qn"),
+            F.sqrt(_dot(F.col("_v"), F.col("_v"))).alias("_qn"),
         )
         # zero-norm queries are excluded like everywhere else (cosine
         # undefined; see with_norm) — this side doesn't route through it
         .filter(F.col("_qn") > 0)
     )
-    c = with_norm(spread(cand_cells, "cand_id"), vec_col, dim).select(
+    c = with_norm(spread(cand_cells, "cand_id"), vec_col).select(
         "cand_id", "cell", F.col("_v").alias("_cv"), F.col("_norm").alias("_cn")
     )
     # a candidate lives in exactly one cell, so a (query, cand) pair can
@@ -344,9 +244,7 @@ def ivf_topk(
         .join(c, "cell")
         .filter(F.col("query_id") != F.col("cand_id"))
         .withColumn(
-            "_cos",
-            _dot_at(F.col("_qv"), F.col("_cv"), dim)
-            / (F.col("_qn") * F.col("_cn")),
+            "_cos", _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("cand_id"))
@@ -359,7 +257,7 @@ def ivf_topk(
 
 def embedding_near_dups(
     emb: DataFrame, threshold: float = 0.4, vec_col: str = "embedding",
-    id_col: str = "vec_id", dim: int | None = None,
+    id_col: str = "vec_id",
 ) -> DataFrame:
     """All pairs with cosine ≥ threshold (brute-force at test scale; the
     LSH bucketing above is the drop-in candidate generator at 100 TB)."""
@@ -368,28 +266,21 @@ def embedding_near_dups(
     # work) and broadcast the build side explicitly — otherwise the
     # planner may stream the single byte-provisioned scan task and
     # serialize the whole pair scan (measured 19.5s -> 1.3s at sf0.1)
-    a = with_norm(spread(emb, id_col), vec_col, dim).select(
+    a = with_norm(spread(emb, id_col), vec_col).select(
         F.col(id_col).alias("vec_id_a"), F.col("_v").alias("_va"), F.col("_norm").alias("_na")
     )
     b = F.broadcast(
-        with_norm(emb, vec_col, dim).select(
+        with_norm(emb, vec_col).select(
             F.col(id_col).alias("vec_id_b"),
             F.col("_v").alias("_vb"),
             F.col("_norm").alias("_nb"),
         )
     )
-    # cosine threshold stated IN the join condition, AFTER the id
-    # inequality: Catalyst pushes the post-join filter into the nested-
-    # loop condition anyway, but lands it as (cos AND a<b) — which
-    # evaluates the expensive dot for every ORDERED pair. Writing the
-    # conjuncts explicitly keeps the cheap id comparison first, so the
-    # dot runs for half the pair space; the survivors' projection
-    # recomputes it (a per-survivor cost, negligible next to the pair
-    # scan). Same rows, same values.
-    cos = _dot_at(F.col("_va"), F.col("_vb"), dim) / (F.col("_na") * F.col("_nb"))
     return (
-        a.join(b, (F.col("vec_id_a") < F.col("vec_id_b")) & (cos >= threshold))
-        .select("vec_id_a", "vec_id_b", F.round(cos, 6).alias("cos_sim"))
+        a.join(b, F.col("vec_id_a") < F.col("vec_id_b"))
+        .withColumn("_cos", _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")))
+        .filter(F.col("_cos") >= threshold)
+        .select("vec_id_a", "vec_id_b", F.round("_cos", 6).alias("cos_sim"))
     )
 
 
@@ -400,7 +291,6 @@ def label_blocked_knn(
     id_col: str = "vec_id",
     block_col: str = "label",
     salt: int = 4,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact k-NN within coarse blocks (the IVF idea with a stored
     cell id): candidates are restricted to vectors sharing ``block_col``,
@@ -417,7 +307,7 @@ def label_blocked_knn(
     replication is bounded (×salt rows of the narrow candidate frame),
     the classic skew-salt trade. Output: vec_id, neighbor_id,
     cos_sim (6dp), rank."""
-    a = with_norm(spread(emb, id_col), vec_col, dim).select(
+    a = with_norm(spread(emb, id_col), vec_col).select(
         F.col(id_col).alias("vec_id"),
         F.col(block_col).alias("_blk"),
         (F.pmod(F.hash(F.col(id_col)), F.lit(salt))).alias("_salt"),
@@ -425,7 +315,7 @@ def label_blocked_knn(
         F.col("_norm").alias("_qn"),
     )
     b = (
-        with_norm(spread(emb, id_col), vec_col, dim)
+        with_norm(spread(emb, id_col), vec_col)
         .select(
             F.col(id_col).alias("neighbor_id"),
             F.col(block_col).alias("_blk_b"),
@@ -443,9 +333,7 @@ def label_blocked_knn(
         & (F.col("_salt") == F.col("_salt_b"))
         & (F.col("vec_id") != F.col("neighbor_id")),
     ).withColumn(
-        "_cos",
-        _dot_at(F.col("_qv"), F.col("_cv"), dim)
-        / (F.col("_qn") * F.col("_cn")),
+        "_cos", _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
     return (

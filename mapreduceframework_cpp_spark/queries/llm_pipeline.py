@@ -322,9 +322,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline, kept as the yardstick for the bucketed variants
     (q_dedup_near / q_sim_lsh_topk / q_sim_ivf_topk, all sub-flag-line
     on the same data); listed in tools/scale_audit.DECLARED_SUPERLINEAR."""
-    return embedding_near_dups(
-        tbl(spark, sf_dir, "embeddings"), threshold=0.4, dim=EMB_DIM
-    )
+    return embedding_near_dups(tbl(spark, sf_dir, "embeddings"), threshold=0.4)
 
 
 # --------------------------------------------------------------------------
@@ -356,9 +354,7 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id % 50 = 0) against the full corpus. Ranks on the raw double
     (bit-identical across engines), rounds only for display."""
     emb = tbl(spark, sf_dir, "embeddings")
-    return cosine_topk(
-        emb.filter(F.col("vec_id") % 50 == 0), emb, k=5, dim=EMB_DIM
-    )
+    return cosine_topk(emb.filter(F.col("vec_id") % 50 == 0), emb, k=5)
 
 
 def _lsh_plane_sql() -> str:
@@ -634,8 +630,7 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = tbl(spark, sf_dir, "embeddings")
     return ivf_topk(
-        emb.filter(F.col("vec_id") % 50 == 0), emb, k=5, n_cells=16, n_probe=4,
-        dim=EMB_DIM,
+        emb.filter(F.col("vec_id") % 50 == 0), emb, k=5, n_cells=16, n_probe=4
     )
 
 
@@ -808,7 +803,7 @@ def q_knn_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose pair space is sum-of-cell-sizes², not corpus², and whose only
     exchange is the hash partition on the block key
     (operators/similarity.label_blocked_knn)."""
-    return label_blocked_knn(tbl(spark, sf_dir, "embeddings"), k=3, dim=EMB_DIM)
+    return label_blocked_knn(tbl(spark, sf_dir, "embeddings"), k=3)
 
 
 @query("q_emb_kmeans")  # rows-only: k-means fit is engine-specific

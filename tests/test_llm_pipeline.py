@@ -5,6 +5,8 @@ oracle diffs live in test_oracle_diff.py."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -27,6 +29,7 @@ from mapreduceframework_cpp_spark.operators.text import (
     lang_id,
     token_counts,
 )
+from mapreduceframework_cpp_spark.queries.llm_pipeline import EMB_DIM
 from mapreduceframework_cpp_spark.sources.tables import tbl
 
 
@@ -139,6 +142,23 @@ def test_lsh_topk_subset_of_true_scores(emb):
     assert approx, "multiprobe LSH should surface some candidates"
     for r in approx:
         assert exact_scores[(r.query_id, r.cand_id)] == r.cos_sim
+
+
+@pytest.mark.parametrize("scale", ["sf0.01", "sf0.1"])
+def test_embeddings_are_fixed_width(spark, oracle_sf_dir, scale):
+    """The similarity queries assume every embedding is a non-null
+    array of EMB_DIM non-null floats. The ``_dot`` fold does not fail on
+    a short, long or null row: it nulls that row's dot products, so
+    sign_lsh_buckets sets bit 0 and cosine pairs drop out silently.
+    Pin the width on the fixture tables the oracle checks run on."""
+    emb = tbl(spark, os.path.join(os.path.dirname(oracle_sf_dir), scale), "embeddings")
+    bad = emb.filter(
+        F.col("embedding").isNull()
+        | (F.size("embedding") != EMB_DIM)
+        | F.exists("embedding", lambda x: x.isNull())
+    )
+    assert emb.count() > 0
+    assert bad.count() == 0, bad.select("vec_id", F.size("embedding")).take(5)
 
 
 def test_pairs_from_banded_degenerate_bucket_guard(spark):

@@ -59,6 +59,12 @@ def test_post_close_driver_artifact_does_not_stale_index(tmp_path):
     folded = int(marker.group(1))
     assert check() == 0
 
+    # a line added above every @query of a module must not stale the
+    # index: rows name the query function, not its line
+    mod = work / "mapreduceframework_cpp_spark" / "queries" / "llm_pipeline.py"
+    mod.write_text("# shifted one line down\n" + mod.read_text())
+    assert check() == 0, "a line shift in queries/ staled the index"
+
     # a post-close artifact from a NEWER round must not red the check
     newer = work / f"CORRECTNESS_r{folded + 1}.json"
     newer.write_text(json.dumps({

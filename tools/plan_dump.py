@@ -41,16 +41,25 @@ def main() -> int:
     from mapreduceframework_cpp_spark.registry import all_queries
     from mapreduceframework_cpp_spark.session import get_spark
 
+    qs = all_queries()
+    unknown = [name for name in args.queries if name not in qs]
+    if unknown:
+        ap.error(
+            f"unknown query name(s): {', '.join(unknown)}; valid names: "
+            + ", ".join(sorted(qs))
+        )
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = all_queries()
     os.makedirs(args.out, exist_ok=True)
     for name in args.queries:
         df = qs[name](spark, sf_dir)
         if args.execute:
             df.write.format("noop").mode("overwrite").save()
-        # _sc/_jdf explain string via the public API
+        # PythonSQLUtils.explainString is Spark's internal JVM helper
+        # behind DataFrame.explain; calling it returns the text that
+        # explain() would only print
         text = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

@@ -6,15 +6,16 @@ thousand lines; the judge (VERDICT r9 item 7) asked for a generated
 index so coverage can be diffed mechanically between rounds. One row
 per registered query:
 
-    query id | family (source module) | file:line | oracle grade |
+    query id | family (source module) | file::qualname | oracle grade |
     latest driver round + status
 
 "Latest driver round" folds every CORRECTNESS_r*.json in round order;
 status is `hash` (hash_match true), `rows` (clean rows-only /
-`no_oracle`), or the recorded err string. Regenerate after any
-registration change, and after any edit that moves a registered
-query's ``@query`` line (the source column is ``file:line``, so a
-line shift anywhere above a decorator stales the index)::
+`no_oracle`), or the recorded err string. The source column names the
+query's function (``file::qualname``), not its line, so editing a
+module without renaming or moving a registered function keeps the index
+fresh. Regenerate after any registration change or function rename or
+move::
 
     python tools/registry_index.py          # rewrites REGISTRY_INDEX.md
     python tools/registry_index.py --check  # exit 1 if file is stale
@@ -82,12 +83,8 @@ def build(max_round: int | None = None) -> str:
     fam_counts: dict[str, list[int]] = {}
     for name, fn in queries.items():
         mod = fn.__module__.rsplit(".", 1)[-1]
-        try:
-            src = os.path.relpath(inspect.getsourcefile(fn), REPO)
-            line = inspect.getsourcelines(fn)[1]
-            loc = f"{src}:{line}"
-        except (OSError, TypeError):
-            loc = "?"
+        src = os.path.relpath(inspect.getsourcefile(fn), REPO)
+        loc = f"{src}::{fn.__qualname__}"
         grade = "sql-oracle" if name in oracles else "rows-only"
         rnd, status = latest.get(name, (0, "never"))
         rows.append((name, mod, loc, grade, rnd, status))
