@@ -1,171 +1,99 @@
-"""Top principal component by distributed power iteration.
+"""Top principal component from one exact covariance pass.
 
 The PCA/whitening primitive a training-data pipeline runs over its
 embedding table (dominant-direction removal, ABTT-style postprocessing,
-low-rank drift monitoring) — iterative like
-:func:`operators.graph.pagerank` and kernel-wise the same R6/R8 loop
-(`MapReduceFramework.cpp:69-149` run once per iteration): score each
-row against the broadcast direction (map), re-accumulate per dimension
-(shuffle+reduce), renormalize.
+low-rank drift monitoring). Kernel-wise it is one R6/R8 job
+(`MapReduceFramework.cpp:69-149`): map each row to its pairwise
+products, shuffle by (i, j), reduce by sum. Each row is augmented with
+a trailing 1.0, so the Gram matrix of ``[x, 1]`` holds Σ xᵢxⱼ, Σ xᵢ and
+n in that one aggregation; the d×d eigenproblem is then solved on the
+driver with ``numpy.linalg.eigh``.
 
-Determinism discipline (same playbook as the rest of the repo): the
-per-dimension accumulation quantizes each x_i·⟨x_i, v⟩ term to a 1e-9
-integer grid BEFORE the cross-row sum, so the reduce is exact int64
-arithmetic — any partitioning produces bit-identical directions. The
-only floats are per-row dots against an identical broadcast v and the
-final normalization of an exact integer vector. Each round
-``localCheckpoint``s the 1-row direction frame so lineage stays flat
-and nothing revisits the base scan's upstream.
+Why it is exact and partition-invariant: every product is quantized to
+a 1e-9 integer grid BEFORE the cross-row sum, so the reduce is int64
+addition — any partitioning yields the same sums, bit for bit. The
+covariance is formed from those sums in Python integers and converted
+to float once per cell, and ``eigh`` on an identical matrix is
+deterministic. There is no iteration, so no convergence caveat: the
+eigenvalue is λ1 of the quantized covariance, not an estimate.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from mapreduceframework_cpp_spark.operators.common import spread
 
 #: quantization grid for cross-row accumulation
 _GRID = 1_000_000_000
 
 
-def power_iteration_top_component(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    max_iter: int = 12,
+def top_principal_component(
+    emb: DataFrame, vec_col: str = "embedding"
 ) -> DataFrame:
-    """Return (dim, loading, eigenvalue) for the covariance top
-    component of ``vec_col`` (mean-centered). ``loading`` is the unit
-    eigenvector entry; ``eigenvalue`` the Rayleigh quotient estimate —
-    both deterministic on any layout.
+    """Return (dim, loading, eigenvalue) for the top component of the
+    mean-centered covariance of ``vec_col``. ``loading`` is the unit
+    eigenvector entry, signed so its largest-|loading| entry (lowest
+    ``dim`` on a tie) is positive; ``eigenvalue`` is λ1.
 
-    Cost per iteration: one posexplode shuffle of |rows|·dims terms
-    keyed by dimension (dims ≪ rows, so the reduce output is tiny) and
-    one broadcast of the dims-length direction. The starting direction
-    is the all-ones vector — deterministic, and non-orthogonal to the
-    top component for any realistic covariance.
-
-    Convergence caveat (inherent to the power method, not the
-    distribution): direction error contracts by λ2/λ1 per round, so on
-    a near-flat spectrum the guarantee that survives is the RAYLEIGH
-    QUOTIENT approaching λ1 (any direction inside the near-degenerate
-    top subspace is equally principal); tests/test_pca.py asserts
-    exactly that, and pins the direction only when the data has a real
-    eigengap."""
-    x = emb.select(F.col(vec_col).alias("x"))
-
-    # mean vector (1e-9-grid exact), kept as a 1-row array frame
-    mean = (
-        x.select(F.posexplode("x").alias("pos", "v"))
-        .groupBy("pos")
-        .agg(
-            F.sum(
-                F.round(F.col("v").cast("double") * _GRID).cast("long")
-            ).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "pos",
-            (F.col("s").cast("double") / F.col("n") / _GRID).alias("m"),
-        )
-        .groupBy()
-        .agg(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm")
-        )
-        .select(F.transform("pm", lambda e: e["m"]).alias("mean"))
-        .localCheckpoint()
+    Raises ``ValueError`` when rows are empty or differ in width, a row
+    or element is null, or there are fewer than two rows."""
+    vec = F.col(vec_col).cast("array<double>")
+    x = emb.select(
+        F.concat(
+            F.coalesce(vec, F.array().cast("array<double>")), F.array(F.lit(1.0))
+        ).alias("x")
     )
-    # NOTE: deliberately inherits the input's partitioning — at real
-    # scale the rounds' fold work tracks input width; at test SF the
-    # per-round work is so small that forcing full-width partitions
-    # costs more in task scheduling than it buys (measured 4.9s -> 8.0s
-    # at sf0.1 with a 32-way repartition here)
-    centered = x.crossJoin(F.broadcast(mean)).select(
-        F.zip_with("x", "mean", lambda a, b: a.cast("double") - b).alias("x")
-    ).localCheckpoint()
-
-    # uniform unit start derived from the mean frame itself — the
-    # embedding width never touches the driver
-    v = mean.select(
-        F.transform(
-            "mean",
-            lambda _: F.lit(1.0) / F.sqrt(F.size("mean").cast("double")),
-        ).alias("v")
-    ).localCheckpoint()
-
-    for it in range(max_iter):
-        scored = centered.crossJoin(F.broadcast(v)).select(
-            "x",
-            F.aggregate(
-                F.zip_with("x", "v", lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            ).alias("dot"),
-        )
-        acc = (
-            scored.select(F.posexplode("x").alias("pos", "xv"), "dot")
-            .select(
-                "pos",
-                F.round(F.col("xv") * F.col("dot") * _GRID)
-                .cast("long")
-                .alias("q"),
-            )
-            .groupBy("pos")
-            .agg(F.sum("q").alias("s"))
-        )
-        v = (
-            acc.groupBy()
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "s"))).alias("ps")
-            )
-            .select(
-                F.transform("ps", lambda e: e["s"].cast("double") / _GRID).alias(
-                    "av"
-                )
-            )
-            .select(
-                "av",
-                F.sqrt(
-                    F.aggregate(
-                        "av", F.lit(0.0), lambda a, t: a + t * t
-                    )
-                ).alias("nrm"),
-            )
-            .select(
-                F.transform("av", lambda t: t / F.col("nrm")).alias("v")
-            )
-        )
-        # truncate lineage every THIRD round (same rationale as
-        # operators/graph.py, cadence re-tuned r5): the per-round work
-        # is tiny, so eager 1-row materializations are the dominant
-        # cost — a 3-round chain still plans trivially, and cadence 3
-        # beat 2/4/6 in an A/B at sf0.1 (3.7 s vs 4.4/4.0/4.2; values
-        # bit-identical at every cadence since checkpoints only cut
-        # lineage)
-        if it % 3 == 2 or it == max_iter - 1:
-            v = v.localCheckpoint()
-
-    # Rayleigh quotient λ = Σ ⟨x, v⟩² / (n − 1), 1e-9-grid exact
-    final = (
-        centered.crossJoin(F.broadcast(v))
+    # spread: the fixture scan is one task, and the d² explode is the
+    # whole cost (A/B at 3 CPUs, sf0.1: 1.16 s spread vs 2.50 s not)
+    cells = (
+        spread(x, "x")
+        .select("x", F.posexplode("x").alias("i", "a"))
+        .select("i", "a", F.posexplode("x").alias("j", "b"))
+        .filter(F.col("j") >= F.col("i"))
         .select(
-            F.aggregate(
-                F.zip_with("x", "v", lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            ).alias("dot")
+            "i", "j", F.round(F.col("a") * F.col("b") * _GRID).cast("long").alias("t")
         )
-        .select(F.round(F.col("dot") * F.col("dot") * _GRID).cast("long").alias("q"))
+        .groupBy("i", "j")
         .agg(
-            (F.sum("q").cast("double") / _GRID / (F.count(F.lit(1)) - 1)).alias(
-                "eigenvalue"
-            )
+            F.sum("t").alias("s"),
+            F.count("t").alias("c"),
+            F.count(F.lit(1)).alias("m"),
         )
+        .collect()  # scalar-probe: (d+1)(d+2)/2 Gram cells, never rows
     )
-    return (
-        v.crossJoin(F.broadcast(final))
-        .select(F.posexplode("v").alias("pos", "loading"), "eigenvalue")
-        .select(
-            F.col("pos").cast("long").alias("dim"),
-            F.round("loading", 9).alias("loading"),
-            F.round("eigenvalue", 6).alias("eigenvalue"),
+    if not cells:
+        raise ValueError("top_principal_component needs at least 2 rows, got 0")
+    d = max(r["i"] for r in cells)  # index of the appended 1.0
+    n = next(r["m"] for r in cells if r["i"] == r["j"] == d)
+    counts = sorted({r["c"] for r in cells} | {r["m"] for r in cells})
+    if counts != [n] or d == 0:
+        raise ValueError(
+            f"{vec_col}: rows are empty, differ in width or hold nulls "
+            f"(per-cell row counts {counts}; the widest row has {d} elements)"
         )
+    if n < 2:
+        raise ValueError(f"top_principal_component needs at least 2 rows, got {n}")
+    S = {(r["i"], r["j"]): r["s"] for r in cells}
+    s = [S[(i, d)] for i in range(d)]
+    den = n * (n - 1) * _GRID * _GRID
+    cov = np.empty((d, d))
+    for (i, j), sij in S.items():
+        if j < d:
+            cov[i, j] = cov[j, i] = (n * _GRID * sij - s[i] * s[j]) / den
+    w, v = np.linalg.eigh(cov)
+    top = v[:, -1]
+    if top[np.argmax(np.abs(top))] < 0:
+        top = -top
+    # a pandas frame plans as a LocalRelation: no job, no Python worker
+    out = pd.DataFrame(
+        {"dim": np.arange(d, dtype=np.int64), "loading": top, "eigenvalue": w[-1]}
+    )
+    return emb.sparkSession.createDataFrame(out).select(
+        "dim",
+        F.round("loading", 9).alias("loading"),
+        F.round("eigenvalue", 6).alias("eigenvalue"),
     )

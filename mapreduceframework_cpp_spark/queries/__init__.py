@@ -467,13 +467,10 @@ ROUND14_ROTATION = [
 ]
 
 #: Alias kept so callers/tests address "the live window" uniformly
-#: across rounds. Round 13 is LIVE: CORRECTNESS_r12 came back perfect
-#: (50/50 hash-green — zero errs, zero rows-only slots; all four
-#: first-row sink clustering/skip-changes/z-order/deletion-vector
-#: queries hash-matched), so the pre-committed round-13 window runs
-#: as derived, draining the r6 evidence tail. New round-13
-#: registrations insert at the head, displacing the tail into
-#: ROUND14_ROTATION.
-VERIFY_ROTATION = ROUND13_ROTATION
+#: across rounds. Round 14 is LIVE: tests/test_driver_contract.py
+#: asserts it equals tools/next_rotation.py::derive_next_window over
+#: the fourteen landed artifacts (CORRECTNESS_r01-r14), so the live
+#: window is the one the evidence derives, not a hand-kept pointer.
+VERIFY_ROTATION = ROUND14_ROTATION
 
-registry.reorder(ROUND13_ROTATION)
+registry.reorder(ROUND14_ROTATION)

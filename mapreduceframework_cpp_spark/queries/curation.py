@@ -538,20 +538,19 @@ def q_emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_emb_pca_top")  # rows-only: iterative power method
+@query("q_emb_pca_top")  # rows-only: no SQL oracle computes an eigenvector
 def q_emb_pca_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top principal component of the embedding table by distributed
-    power iteration (operators/pca.py) — the dominant-direction /
-    whitening primitive (ABTT-style postprocessing, drift monitoring).
-    Rows-only: iterative; correctness is pytest-bound against numpy's
-    exact eigendecomposition (cosine alignment > 0.999 and Rayleigh
-    eigenvalue within 1%, tests/test_pca.py) plus partition
-    invariance of the integer-grid accumulation."""
-    from mapreduceframework_cpp_spark.operators.pca import (
-        power_iteration_top_component,
-    )
+    """Top principal component of the embedding table from one exact
+    covariance pass and a driver-side ``eigh`` (operators/pca.py) — the
+    dominant-direction / whitening primitive (ABTT-style
+    postprocessing, drift monitoring). Rows-only: correctness is
+    pytest-bound against numpy's eigendecomposition at sf0.001, sf0.01
+    and sf0.1 (eigenvalue within 1e-6 of lambda1, |cos| >= 1 - 1e-6 to
+    the top eigenvector, tests/test_pca.py) plus partition invariance
+    of the integer-grid accumulation."""
+    from mapreduceframework_cpp_spark.operators.pca import top_principal_component
 
-    return power_iteration_top_component(tbl(spark, sf_dir, "embeddings"))
+    return top_principal_component(tbl(spark, sf_dir, "embeddings"))
 
 
 #: lanes normalized by q_emb_quantile_norm (bounded output; the

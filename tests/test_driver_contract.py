@@ -55,12 +55,13 @@ def test_output_columns_are_atomic(name, spark, sf_dir):
 def test_registration_follows_verify_rotation():
     """The verifier checks the first ~50 registered queries per round;
     queries/__init__.py declares the rotation explicitly. Guard that
-    registration actually honors it and that the live round-13 window
-    spends its slots per the standing policy. Round 12 landed PERFECT
-    (derived HERE from the frozen CORRECTNESS_r12.json — 50/50
-    hash-green, zero errs, zero rows-only slots), so the round-13
-    window is the pure mechanical derivation, with any new round-13
-    registrations forming its unproven head.
+    registration actually honors it, that the live round-14 window is
+    the one all fourteen CORRECTNESS artifacts derive, and that the
+    earlier windows spent their slots per the standing policy. Round
+    12 landed PERFECT (derived HERE from the frozen
+    CORRECTNESS_r12.json — 50/50 hash-green, zero errs, zero rows-only
+    slots), so the round-13 window is the pure mechanical derivation,
+    with any new round-13 registrations forming its unproven head.
     The green fold AND the window derivation are imported from
     tools/next_rotation.py (ADVICE r4: a local copy of the fold
     silently diverged from the CLI's policy)."""
@@ -83,8 +84,8 @@ def test_registration_follows_verify_rotation():
     from tools.next_rotation import derive_next_window, green_set
 
     registered = list(_QUERIES)
-    assert VERIFY_ROTATION is ROUND13_ROTATION  # the live window alias
-    assert registered[: len(ROUND13_ROTATION)] == ROUND13_ROTATION
+    assert VERIFY_ROTATION is ROUND14_ROTATION  # the live window alias
+    assert registered[: len(ROUND14_ROTATION)] == ROUND14_ROTATION
     assert len(ROUND13_ROTATION) == 50
     assert len(set(ROUND13_ROTATION)) == 50
     assert not set(ROUND13_ROTATION) & set(ROUND12_ROTATION)
@@ -144,6 +145,16 @@ def test_registration_follows_verify_rotation():
     assert not set(ROUND14_ROTATION) & set(ROUND12_ROTATION)
     assert not set(ROUND14_ROTATION) & set(ROUND13_ROTATION)
     assert not set(ROUND14_ROTATION) & rows_only
+
+    # the LIVE window is the one the fourteen landed artifacts derive
+    # (r13 and r14 both re-checked the round-13 window, so this equals
+    # the round-14 plan above with nothing assumed)
+    every_round = all_rounds + [
+        os.path.join(repo_root, f"CORRECTNESS_{r}.json") for r in ("r13", "r14")
+    ]
+    live, live_unproven = derive_next_window(every_round, registered, oracles)
+    assert live_unproven == []
+    assert VERIFY_ROTATION == live
 
     # drain invariant: after round 13 runs, no SQL-oracle query has
     # pre-r7 latest evidence, and the r7-latest overflow is exactly
