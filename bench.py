@@ -319,11 +319,9 @@ _HEAVY_N = 12
 _HEAVY_MAX_MEDIAN_RATIO = 1.25
 
 
-def _load_quiet_reference() -> dict[str, float] | None:
-    """Per-query quiet-box reference timings from
-    bench_quiet_reference.json (or $BENCH_QUIET_REFERENCE_FILE).
-    Returns None — heavy verdict unknown — when missing/malformed,
-    for the same reason sentinel bands do (ADVICE r6)."""
+def _quiet_reference_file() -> dict | None:
+    """bench_quiet_reference.json (or $BENCH_QUIET_REFERENCE_FILE),
+    parsed; None when missing or unparsable."""
     path = os.environ.get(
         "BENCH_QUIET_REFERENCE_FILE",
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -332,12 +330,31 @@ def _load_quiet_reference() -> dict[str, float] | None:
     try:
         with open(path) as f:
             raw = json.load(f)
-        q = raw.get("queries")
-        if not isinstance(q, dict) or not q:
-            return None
-        return {n: float(v) for n, v in q.items()}
-    except (OSError, ValueError, TypeError):
+    except (OSError, ValueError):
         return None
+    return raw if isinstance(raw, dict) else None
+
+
+def _load_quiet_reference() -> dict[str, float] | None:
+    """Per-query quiet-box reference timings from
+    bench_quiet_reference.json (or $BENCH_QUIET_REFERENCE_FILE).
+    Returns None — heavy verdict unknown — when missing/malformed,
+    for the same reason sentinel bands do (ADVICE r6)."""
+    q = (_quiet_reference_file() or {}).get("queries")
+    if not isinstance(q, dict) or not q:
+        return None
+    try:
+        return {n: float(v) for n, v in q.items()}
+    except (ValueError, TypeError):
+        return None
+
+
+def _host_cpus() -> int:
+    """CPUs this process may run on (what ``nproc`` prints)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # not Linux
+        return os.cpu_count() or 1
 
 
 def _heavy_check(
@@ -381,14 +398,24 @@ _MOVER_CAP = 20
 
 def _movers(
     timings: dict[str, float], sf: float | None
-) -> dict[str, float] | None:
+) -> dict[str, float] | str | None:
     """EVERY query at >= _MOVER_RATIO x its quiet-reference value,
     worst first (capped at _MOVER_CAP entries), so the round log's
     mover list is emitted by the run itself instead of hand-compiled.
-    None when no reference applies (wrong sf / missing file)."""
+    None when no reference applies (wrong sf / missing file). When the
+    reference records its host's ``cpus`` and this host has a different
+    count, the ratios measure the hardware, not the code: the check
+    reports that mismatch instead of a list."""
     ref = _load_quiet_reference()
     if ref is None or sf != 0.1:
         return None
+    ref_cpus = (_quiet_reference_file() or {}).get("cpus")
+    host_cpus = _host_cpus()
+    if ref_cpus is not None and ref_cpus != host_cpus:
+        return (
+            f"reference taken on {ref_cpus} CPUs, this host has "
+            f"{host_cpus}: no mover list"
+        )
     out = {
         n: round(timings[n] / ref[n], 2)
         for n in timings

@@ -9,24 +9,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 
-def driver_max_heap_bytes(spark) -> int:
-    """Max heap of the JVM that would BUILD any broadcast relation (the
-    driver — in local mode, the whole engine). Operators that choose an
-    explicit broadcast-hint strategy gate on this: a hint bypasses
-    ``spark.sql.autoBroadcastJoinThreshold``, so Catalyst will attempt
-    the build even on a starved JVM where it cannot reserve build
-    memory ("Not enough memory to build and broadcast", observed in
-    tools/spill_probe.py's 1.2g leg). Falls back to "plenty" when the
-    gateway is unreachable — the conservative default for a
-    production-sized cluster."""
-    try:
-        return int(
-            spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
-        )
-    except Exception:
-        return 1 << 62
-
-
 def portable_hash60(col: str) -> Column:
     """60-bit deterministic hash of a string column — the top 15 hex
     chars of its md5 digest, parsed base-16. Always non-negative

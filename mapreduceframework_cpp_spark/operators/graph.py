@@ -9,15 +9,20 @@ Determinism discipline: ranks are EXACT integers ("nano-rank" units,
 per-node aggregation sums exact longs (order-independent), and the only
 float op per iteration is one double multiply + floor on an exact
 integer — so results are bit-identical on any partitioning, any
-cluster. Same ``localCheckpoint`` lineage-truncation pattern as
-``dedup_clusters``: executor-side materialization per round, scalars
-never hit the driver.
+cluster.
+
+Plan shape (the co-partitioned PageRank of the Spark RDD paper, Zaharia
+et al., NSDI 2012): one materialized edge frame, hash-partitioned by
+``src`` once and reused by every round; ranks come out of each round
+already partitioned the same way, so a round is ONE shuffle. No
+broadcast and no per-round checkpoint: the rounds stay lazy and the
+caller's action runs them as one query.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 
 #: one rank unit = 1e9 nano-ranks
 _UNIT = 1_000_000_000
@@ -25,7 +30,7 @@ _UNIT = 1_000_000_000
 
 def pagerank(
     edges: DataFrame, damping: float = 0.85, max_iter: int = 10,
-    raw_units: bool = False, broadcast_ranks: bool | None = None,
+    raw_units: bool = False,
 ) -> DataFrame:
     """PageRank over directed (src, dst) edges; returns (node, rank)
     with rank in units of 1.0-per-node (sum ≈ n_nodes minus the mass
@@ -35,88 +40,59 @@ def pagerank(
     instead of the rounded double — the cross-engine-hashable form
     (no float ever leaves the plan).
 
-    Each iteration is one join + one partial-aggregated group-by over
-    (dst, contribution) pairs — R6/R8 kernel shapes; cost per round is
-    O(|edges|) shuffled on node keys."""
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    # degree-annotated edge list is loop-invariant: materialize once,
-    # and derive EVERYTHING the loop touches from the checkpoint —
-    # a node frame built on the raw edges would re-run the upstream
-    # pipeline (e.g. MinHash-LSH) once per iteration
-    edges_deg = edges.join(out_deg, "src").localCheckpoint()
-    # size the LOOP frames to the materialized graph, not the session
-    # default: every iteration inherits this partitioning, and a small
-    # graph paying 32 tasks × rounds of scheduling costs more than the
-    # work (measured ~20% of wall at test SF). The count is a scalar
-    # probe on the already-materialized checkpoint (no recompute); the
-    # re-checkpoint exchanges only the small edge frame, once.
-    n_edges = edges_deg.count()
-    sc = edges_deg.sparkSession.sparkContext
-    loop_parts = max(1, min(sc.defaultParallelism, (n_edges // 50_000) + 1))
-    if loop_parts != edges_deg.rdd.getNumPartitions():
-        edges_deg = edges_deg.repartition(loop_parts, "src").localCheckpoint()
-    nodes = (
-        edges_deg.select("src")
-        .union(edges_deg.select(F.col("dst").alias("src")))
-        .distinct()
-        .select(F.col("src").alias("node"))
-        .repartition(loop_parts, "node")
+    ``edges`` is read exactly once: partitioned by ``src``, annotated
+    with its out-degree by a ``count(*) over (partition by src)`` window
+    and checkpointed. The checkpoint forgets its partitioning, so the
+    loop shuffles it by ``src`` once and every later round reuses that
+    exchange. A round joins it with the ranks (a shuffled hash join built
+    on the ranks, which arrive already partitioned by node) and sums the
+    per-edge contributions plus one zero per node, so a node without
+    in-edges still gets the teleport base; the repartition on the node
+    key in front of that ``sum`` is the round's only shuffle. Edges with
+    a null endpoint are ignored."""
+    if max_iter < 1:
+        raise ValueError("max_iter must be at least 1")
+    # at least 2: a 1-partition repartition plans as SinglePartition,
+    # which the join cannot pair with the edges' hash partitioning
+    parts = max(2, edges.sparkSession.sparkContext.defaultParallelism)
+    by_src = Window.partitionBy("src")
+    both_ends = "src IS NOT NULL AND dst IS NOT NULL"
+    edges_deg = (
+        edges.where(both_ends)
+        .repartition(parts, "src")
+        .withColumn("deg", F.count("*").over(by_src))
+        .withColumn("lead", F.row_number().over(by_src.orderBy("dst")) == 1)
         .localCheckpoint()
+        # restated: otherwise the optimizer infers a null filter on the
+        # edges in every round but the last, and the last round's edge
+        # exchange would not match (and reuse) the others
+        .where(both_ends)
     )
-
-    # Rank-frame broadcast: the per-round join's big side is the
-    # checkpointed edge list; the rank frame is |nodes| rows of
-    # (key, long). Below ~1M nodes (~tens of MB) shipping ranks to every
-    # executor removes the ONLY per-round exchange of the edge frame —
-    # each iteration is then: local scan of checkpointed edges →
-    # map-side partial sum → exchange of already-aggregated (dst, in_q)
-    # pairs (≤ |nodes| rows per partition). Billion-node graphs fall
-    # back to the co-partitioned shuffle join automatically. The auto
-    # mode is ALSO driver-heap-gated: an explicit broadcast hint
-    # bypasses autoBroadcastJoinThreshold, and on a starved driver the
-    # build cannot reserve memory while loop tasks hold the unified
-    # pool — Spark aborts rather than spills (spill-probe receipt).
-    # Undersized JVMs take the shuffle join, which degrades by
-    # spilling instead of dying.
-    if broadcast_ranks is None:
-        from mapreduceframework_cpp_spark.operators.common import (
-            driver_max_heap_bytes,
-        )
-
-        broadcast_ranks = (
-            nodes.count() <= 1_000_000
-            and driver_max_heap_bytes(edges.sparkSession) >= (4 << 30)
-        )
-    bcast = broadcast_ranks
-
+    # per edge, its share of the src's rank to dst; per src (on its lead
+    # edge), a zero to itself, so a node without in-edges still gets a
+    # row (and the base) — every node is a src or a dst
+    share = F.struct(  # exact integer division
+        F.col("dst").alias("src"), F.expr("rank_q div deg").alias("c")
+    )
+    zero = F.struct(F.col("src"), F.lit(0).cast("long").alias("c"))
+    shares = F.inline(
+        F.when(F.col("lead"), F.array(share, zero)).otherwise(F.array(share))
+    )
     base = int((1.0 - damping) * _UNIT)
-    ranks = nodes.withColumn("rank_q", F.lit(_UNIT).cast("long")).localCheckpoint()
+    new_rank = (F.lit(base) + F.floor(damping * F.sum("c"))).cast("long")
+
+    # round 1 needs no join: every rank starts at one unit
+    joined = edges_deg.withColumn("rank_q", F.lit(_UNIT).cast("long"))
     for it in range(max_iter):
-        contribs = (
-            edges_deg.join(
-                F.broadcast(ranks) if bcast else ranks,
-                edges_deg.src == ranks.node,
-            )
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_q div deg").alias("c"),  # exact integer division
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_q"))
+        if it:
+            joined = edges_deg.join(ranks.hint("shuffle_hash"), "src")
+        ranks = (
+            joined.select(shares)
+            .repartition(parts, "src")
+            .groupBy("src")
+            .agg(new_rank.alias("rank_q"))
         )
-        ranks = nodes.join(contribs, "node", "left").select(
-            "node",
-            (
-                F.lit(base)
-                + F.floor(damping * F.coalesce("in_q", F.lit(0)))
-            ).cast("long").alias("rank_q"),
-        )
-        # truncate lineage every OTHER round (and on the last): a
-        # 2-round join+agg chain is trivially plannable, and halving
-        # the eager materializations halves the per-round job-
-        # scheduling overhead that dominates small-graph wall time.
-        if it % 2 == 1 or it == max_iter - 1:
-            ranks = ranks.localCheckpoint()
+    ranks = ranks.withColumnRenamed("src", "node")
     if raw_units:
-        return ranks.select("node", "rank_q")
+        return ranks
     return ranks.select("node", F.round(F.col("rank_q") / _UNIT, 9).alias("rank"))

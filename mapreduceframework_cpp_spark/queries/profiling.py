@@ -206,6 +206,16 @@ _PAGERANK_ORACLE = f"""
 """
 
 
+def _symmetric(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """Both directions of every (a, b) pair as (src, dst) edges, from ONE
+    reference to ``pairs`` — a union of two selects would put the whole
+    upstream pipeline (e.g. MinHash-LSH) into the plan twice."""
+    return pairs.select(F.inline(F.array(
+        F.struct(F.col(a).alias("src"), F.col(b).alias("dst")),
+        F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
+    )))
+
+
 @query("q_graph_pagerank", oracle=_PAGERANK_ORACLE)
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the near-dup graph (operators/graph.py): rank
@@ -229,11 +239,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_near_dups(
         docs, n=3, num_hashes=64, bands=32, rows_per_band=2, threshold=0.7
     )
-    edges = pairs.select(
-        F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")
-    ).union(
-        pairs.select(F.col("doc_id_b").alias("src"), F.col("doc_id_a").alias("dst"))
-    )
+    edges = _symmetric(pairs, "doc_id_a", "doc_id_b")
     return pagerank(edges, max_iter=8, raw_units=True)
 
 
@@ -647,11 +653,10 @@ def q_graph_purchase_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-agnostic and q_graph_pagerank exercises the bigger graph). Ranks are exact integer
     nano-ranks (operators/graph.py) so the 8-round power iteration is
     bit-identical to the unrolled-CTE oracle — an iterative algorithm
-    under full hash verification, not rows-only. Scale: per round one
-    O(|edges|) join + partial-aggregated group-by shuffled on node
-    keys; the degree-annotated edge list is checkpointed once and the
-    loop frames are sized to the materialized graph, not the session
-    default."""
+    under full hash verification, not rows-only. Scale: the symmetric
+    edge list reads ``pair`` once and is checkpointed once; each round
+    is one O(|edges|) co-partitioned join and one shuffle on the node
+    key (operators/graph.py)."""
     from mapreduceframework_cpp_spark.operators.graph import pagerank
 
     o = tbl(spark, sf_dir, "orders").filter(
@@ -666,9 +671,7 @@ def q_graph_purchase_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = pair.select(
-        F.col("cnode").alias("src"), F.col("snode").alias("dst")
-    ).union(pair.select(F.col("snode").alias("src"), F.col("cnode").alias("dst")))
+    edges = _symmetric(pair, "cnode", "snode")
     return pagerank(edges, damping=0.85, max_iter=8, raw_units=True)
 
 

@@ -183,7 +183,10 @@ def test_quiet_reference_matches_headline():
     BENCH_DETAIL when HEADLINE changes."""
     ref_path = os.path.join(os.path.dirname(bench.__file__),
                             "bench_quiet_reference.json")
-    ref = json.load(open(ref_path))["queries"]
+    raw = json.load(open(ref_path))
+    # the mover check needs the reference host's width to compare hosts
+    assert isinstance(raw.get("cpus"), int)
+    ref = raw["queries"]
     missing = [q for q in ref if q not in bench.HEADLINE]
     assert not missing, f"reference queries no longer in HEADLINE: {missing}"
     assert len(ref) >= bench._HEAVY_N
@@ -232,3 +235,36 @@ def test_emit_mechanical_mover_list(tmp_path, monkeypatch):
 
     # wrong sf → None
     assert run(dict(ref), sf=0.01)["movers_over_1p3"] is None
+
+
+def test_mover_list_needs_a_reference_from_a_host_of_the_same_width(
+    tmp_path, monkeypatch
+):
+    """A reference that records its host's CPU count gives a mover list
+    only on a host with that count; elsewhere the check reports the
+    mismatch (reference CPUs vs host CPUs) instead of ratios that
+    measure the hardware."""
+    import io
+    from contextlib import redirect_stdout
+
+    monkeypatch.setattr(
+        bench.os.path, "abspath", lambda _: str(tmp_path / "bench.py")
+    )
+    monkeypatch.delenv("BENCH_SENTINEL_FILE", raising=False)
+    monkeypatch.delenv("BENCH_QUIET_REFERENCE_FILE", raising=False)
+    monkeypatch.setattr(bench, "_host_cpus", lambda: 4)
+
+    ref = {f"q_m_{i:02d}": 1.0 for i in range(10)}
+    timings = dict(ref, q_m_07=1.7)
+
+    def run(cpus):
+        (tmp_path / "bench_quiet_reference.json").write_text(
+            json.dumps({"queries": ref, "cpus": cpus})
+        )
+        with redirect_stdout(io.StringIO()):
+            return bench.emit(timings, sf=0.1)["movers_over_1p3"]
+
+    # same width: movers flagged exactly as without a recorded count
+    assert run(4) == {"q_m_07": 1.7}
+    # other width: the mismatch, not a list
+    assert run(32) == "reference taken on 32 CPUs, this host has 4: no mover list"

@@ -12,8 +12,8 @@ Runs under the SAME engine session as bench.py (RUNTIME_CONFS applied),
 so the dumped initial plans match what the bench executes. Note these
 are pre-execution plans (``isFinalPlan=false``); AQE runtime rewrites
 (coalesced reads, demoted joins, reused exchanges) only show in the
-post-run plan — use --execute to run the query first (noop sink) and
-dump the FINAL adaptive plan instead.
+post-run plan — use --execute to run the query first and dump the
+FINAL adaptive plan instead.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ def main() -> int:
     ap.add_argument("--suffix", default="before")
     ap.add_argument(
         "--execute", action="store_true",
-        help="run the query (noop sink) first and dump the final "
+        help="run the query first and dump the final "
         "adaptive plan, not the initial one",
     )
     args = ap.parse_args()
@@ -56,7 +56,9 @@ def main() -> int:
     for name in args.queries:
         df = qs[name](spark, sf_dir)
         if args.execute:
-            df.write.format("noop").mode("overwrite").save()
+            # run THIS query execution (a write would plan and run a
+            # new one, leaving this plan initial); no rows reach Python
+            df._jdf.queryExecution().toRdd().count()
         # PythonSQLUtils.explainString is Spark's internal JVM helper
         # behind DataFrame.explain; calling it returns the text that
         # explain() would only print
