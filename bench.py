@@ -357,6 +357,22 @@ def _host_cpus() -> int:
         return os.cpu_count() or 1
 
 
+def _width_mismatch() -> str | None:
+    """Why the quiet reference may not rate this run, or None. When the
+    reference records its host's ``cpus`` and this host has a different
+    count, ratios against it measure the hardware, not the code, so
+    ``emit`` drops the heavy verdict and puts this text in place of the
+    mover list."""
+    ref_cpus = (_quiet_reference_file() or {}).get("cpus")
+    host_cpus = _host_cpus()
+    if ref_cpus is None or ref_cpus == host_cpus:
+        return None
+    return (
+        f"reference taken on {ref_cpus} CPUs, this host has "
+        f"{host_cpus}: no mover list"
+    )
+
+
 def _heavy_check(
     timings: dict[str, float], sf: float | None
 ) -> tuple[float | None, bool | None]:
@@ -398,24 +414,14 @@ _MOVER_CAP = 20
 
 def _movers(
     timings: dict[str, float], sf: float | None
-) -> dict[str, float] | str | None:
+) -> dict[str, float] | None:
     """EVERY query at >= _MOVER_RATIO x its quiet-reference value,
     worst first (capped at _MOVER_CAP entries), so the round log's
     mover list is emitted by the run itself instead of hand-compiled.
-    None when no reference applies (wrong sf / missing file). When the
-    reference records its host's ``cpus`` and this host has a different
-    count, the ratios measure the hardware, not the code: the check
-    reports that mismatch instead of a list."""
+    None when no reference applies (wrong sf / missing file)."""
     ref = _load_quiet_reference()
     if ref is None or sf != 0.1:
         return None
-    ref_cpus = (_quiet_reference_file() or {}).get("cpus")
-    host_cpus = _host_cpus()
-    if ref_cpus is not None and ref_cpus != host_cpus:
-        return (
-            f"reference taken on {ref_cpus} CPUs, this host has "
-            f"{host_cpus}: no mover list"
-        )
     out = {
         n: round(timings[n] / ref[n], 2)
         for n in timings
@@ -496,6 +502,10 @@ def emit(timings: dict[str, float], sf: float | None) -> dict:
     # visibly-inflated runs, so the headline also carries the median
     # inflation of the reference's 12 slowest queries
     heavy_ratio, heavy_ok = _heavy_check(timings, sf)
+    movers = _movers(timings, sf)
+    width_mismatch = _width_mismatch() if movers is not None else None
+    if width_mismatch:
+        heavy_ratio = heavy_ok = None
     headline = {
         "metric": "headline_suite_wall_sec",
         "value": total,
@@ -507,7 +517,7 @@ def emit(timings: dict[str, float], sf: float | None) -> dict:
         "sentinel_ok": sentinel_ok,
         "heavy_median_ratio": heavy_ratio,
         "heavy_ok": heavy_ok,
-        "movers_over_1p3": _movers(timings, sf),
+        "movers_over_1p3": width_mismatch or movers,
         "detail": "BENCH_DETAIL.json",
     }
     print(json.dumps(headline))

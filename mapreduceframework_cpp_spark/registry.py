@@ -8,7 +8,10 @@ which the driver records as the weaker check.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import os
+import re
+from collections.abc import Callable, Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -16,6 +19,13 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+
+#: the repo root, where the driver drops one CORRECTNESS_rNN.json a round
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+#: how many registered queries the driver checks per round
+WINDOW = 50
+
+Artifact = tuple[int, dict[str, dict]]
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -36,11 +46,10 @@ def reorder(priority: list[str]) -> None:
     """Rebuild the registration order: ``priority`` names first (in the
     given order), everything else after in original registration order.
 
-    The external verifier checks the first N registered queries per
-    round, so each round promotes the queries still awaiting a hard
-    correctness signal (see queries/__init__.py). Unknown names are an
-    error — a stale rotation list should fail loudly, not silently
-    shrink the verified window."""
+    The driver checks the first :data:`WINDOW` registered queries, so
+    queries/__init__.py passes the window :func:`derive_next_window`
+    derives. Unknown names are an error: a stale list must fail loudly,
+    not silently shrink the verified window."""
     unknown = [n for n in priority if n not in QUERIES]
     if unknown:
         raise KeyError(f"reorder: unknown queries {unknown}")
@@ -48,6 +57,74 @@ def reorder(priority: list[str]) -> None:
     ordered = {n: QUERIES[n] for n in [*priority, *rest]}
     QUERIES.clear()
     QUERIES.update(ordered)
+
+
+def correctness_artifacts(root: str = ROOT) -> list[Artifact]:
+    """Every ``CORRECTNESS_rNN.json`` in ``root`` as ``(round, rows)``,
+    parsed once, in numeric round order (r100 after r11). Other names
+    are skipped; an unreadable artifact raises, since skipping it would
+    silently move the window."""
+    out = []
+    for entry in os.listdir(root):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", entry)
+        if m:
+            with open(os.path.join(root, entry)) as f:
+                out.append((int(m.group(1)), json.load(f)))
+    return sorted(out, key=lambda a: a[0])
+
+
+def _green_row(name: str, row: dict, oracles: set[str]) -> bool:
+    """A SQL-oracle query is green on ``hash_match`` without ``err``; a
+    rows-only query on a clean run (``spark_rows`` present, ``err``
+    absent or the driver's ``no_oracle`` tag), the most the driver can
+    prove without an oracle."""
+    if name in oracles:
+        return not row.get("err") and bool(row.get("hash_match"))
+    return row.get("spark_rows") is not None and row.get("err") in (
+        None,
+        "no_oracle",
+    )
+
+
+def derive_next_window(
+    artifacts: list[Artifact],
+    queries: Iterable[str],
+    oracles: Iterable[str],
+    pinned: Mapping[str, int] | None = None,
+) -> tuple[list[str], list[str]]:
+    """The next verification window, and every unproven name.
+
+    1. Unproven: no row, or a red newest row (a re-confirm that comes
+       back red re-queues at the head), registration order.
+    2. Pinned: each ``pinned`` name (changed after round ``pinned[n]``)
+       until an artifact newer than that round holds a green row for it.
+    3. Backfill: the other SQL-oracle queries, stalest first by (newest
+       round with a row, row order in that artifact). Rows-only queries
+       never re-confirm: a clean run only re-proves "returns rows"."""
+    queries = list(queries)
+    oracles = set(oracles)
+    pinned = dict(pinned or {})
+    not_sql = [n for n in pinned if n not in oracles]
+    if not_sql:
+        raise ValueError(f"pinned names without a SQL oracle: {not_sql}")
+    green: set[str] = set()
+    latest: dict[str, tuple[int, int]] = {}
+    for rnd, rows in artifacts:
+        for j, (name, row) in enumerate(rows.items()):
+            latest[name] = (rnd, j)
+            if not _green_row(name, row, oracles):
+                green.discard(name)
+                continue
+            green.add(name)
+            if rnd > pinned.get(name, rnd):
+                del pinned[name]
+    unproven = [q for q in queries if q not in green]
+    pins = [q for q in pinned if q in green]
+    backfill = sorted(
+        (q for q in queries if q in green and q in oracles and q not in pinned),
+        key=lambda q: latest[q],
+    )
+    return (unproven + pins + backfill)[:WINDOW], unproven
 
 
 def all_queries() -> dict[str, QueryFn]:

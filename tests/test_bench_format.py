@@ -241,9 +241,10 @@ def test_mover_list_needs_a_reference_from_a_host_of_the_same_width(
     tmp_path, monkeypatch
 ):
     """A reference that records its host's CPU count gives a mover list
-    only on a host with that count; elsewhere the check reports the
-    mismatch (reference CPUs vs host CPUs) instead of ratios that
-    measure the hardware."""
+    and a heavy verdict only on a host with that count; elsewhere the
+    mover list reports the mismatch (reference CPUs vs host CPUs) and
+    the heavy verdict reads unknown, instead of ratios that measure the
+    hardware."""
     import io
     from contextlib import redirect_stdout
 
@@ -262,9 +263,15 @@ def test_mover_list_needs_a_reference_from_a_host_of_the_same_width(
             json.dumps({"queries": ref, "cpus": cpus})
         )
         with redirect_stdout(io.StringIO()):
-            return bench.emit(timings, sf=0.1)["movers_over_1p3"]
+            return bench.emit(timings, sf=0.1)
 
     # same width: movers flagged exactly as without a recorded count
-    assert run(4) == {"q_m_07": 1.7}
-    # other width: the mismatch, not a list
-    assert run(32) == "reference taken on 32 CPUs, this host has 4: no mover list"
+    same = run(4)
+    assert same["movers_over_1p3"] == {"q_m_07": 1.7}
+    assert same["heavy_median_ratio"] == 1.0 and same["heavy_ok"] is True
+    # other width: the mismatch, not a list, and no heavy verdict
+    other = run(32)
+    assert other["movers_over_1p3"] == (
+        "reference taken on 32 CPUs, this host has 4: no mover list"
+    )
+    assert other["heavy_median_ratio"] is None and other["heavy_ok"] is None

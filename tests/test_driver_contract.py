@@ -52,146 +52,173 @@ def test_output_columns_are_atomic(name, spark, sf_dir):
     )
 
 
+def _latest(artifacts) -> dict[str, tuple[int, int]]:
+    """(newest round with a driver row, row order in that artifact)."""
+    return {
+        name: (rnd, j)
+        for rnd, rows in artifacts
+        for j, name in enumerate(rows)
+    }
+
+
 def test_registration_follows_verify_rotation():
-    """The verifier checks the first ~50 registered queries per round;
-    queries/__init__.py declares the rotation explicitly. Guard that
-    registration actually honors it, that the live round-14 window is
-    the one all fourteen CORRECTNESS artifacts derive, and that the
-    earlier windows spent their slots per the standing policy. Round
-    12 landed PERFECT (derived HERE from the frozen
-    CORRECTNESS_r12.json — 50/50 hash-green, zero errs, zero rows-only
-    slots), so the round-13 window is the pure mechanical derivation,
-    with any new round-13 registrations forming its unproven head.
-    The green fold AND the window derivation are imported from
-    tools/next_rotation.py (ADVICE r4: a local copy of the fold
-    silently diverged from the CLI's policy)."""
-    import json
-    import os
-    import sys
-
-    from mapreduceframework_cpp_spark.queries import (
-        ROUND11_ROTATION,
-        ROUND12_ROTATION,
-        ROUND13_ROTATION,
-        ROUND14_ROTATION,
-        VERIFY_ROTATION,
+    """The driver checks the first WINDOW registered queries; the
+    window is derived at import from every CORRECTNESS artifact, so
+    registration must lead with exactly that derivation, and the
+    derivation must reproduce the windows the driver really ran."""
+    from mapreduceframework_cpp_spark.queries import PINNED
+    from mapreduceframework_cpp_spark.registry import (
+        WINDOW,
+        all_oracles,
+        correctness_artifacts,
+        derive_next_window,
     )
-    from mapreduceframework_cpp_spark.registry import all_oracles
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if repo_root not in sys.path:
-        sys.path.insert(0, repo_root)
-    from tools.next_rotation import derive_next_window, green_set
 
     registered = list(_QUERIES)
-    assert VERIFY_ROTATION is ROUND14_ROTATION  # the live window alias
-    assert registered[: len(ROUND14_ROTATION)] == ROUND14_ROTATION
-    assert len(ROUND13_ROTATION) == 50
-    assert len(set(ROUND13_ROTATION)) == 50
-    assert not set(ROUND13_ROTATION) & set(ROUND12_ROTATION)
-    assert not set(ROUND13_ROTATION) & set(ROUND11_ROTATION)
-
     oracles = set(all_oracles())
-    # round 12 landed perfect: no SQL-oracle row in its window ran
-    # without error yet hash-failed, so there is nothing to re-queue
-    r12 = json.load(open(os.path.join(repo_root, "CORRECTNESS_r12.json")))
-    reds = [
-        n
-        for n in ROUND12_ROTATION
-        if n in r12
-        and n in oracles
-        and not r12[n].get("err")
-        and not r12[n].get("hash_match")
-    ]
-    assert reds == [], f"round-12 reds exist — re-queue them: {reds}"
-
-    all_rounds = [
-        os.path.join(repo_root, f"CORRECTNESS_{r}.json")
-        for r in (
-            "r01", "r02", "r03", "r04", "r05", "r06",
-            "r07", "r08", "r09", "r10", "r11", "r12",
-        )
-    ]
-    green = green_set(all_rounds, oracles)
-    unproven = [q for q in registered if q not in green]
-
-    # the round-13 window = the PURE mechanical derivation over the
-    # eleven pre-r12 artifacts with ROUND12 planned, which places any
-    # new (unproven) round-13 registrations at the head automatically.
-    # No manual slotting at all.
-    pre_r12 = all_rounds[:-1]
-    derived13, derived13_unproven = derive_next_window(
-        pre_r12, registered, oracles, planned=[ROUND12_ROTATION]
-    )
-    assert derived13_unproven == unproven
-    assert ROUND13_ROTATION == derived13
     rows_only = set(registered) - oracles
-    assert not set(ROUND13_ROTATION) & rows_only, (
-        "terminal rows-only queries must not hold re-confirm slots"
-    )
+    artifacts = correctness_artifacts()
+    rounds = [rnd for rnd, _ in artifacts]
+    assert rounds == sorted(rounds) and rounds[:14] == list(range(1, 15))
 
-    # the committed round-14 plan is MECHANICAL: derived from all
-    # twelve artifacts with the live round-13 window folded in as
-    # planned evidence — the plan cannot drift from the tool
-    derived14, derived14_unproven = derive_next_window(
-        all_rounds,
-        registered,
-        oracles,
-        planned=[ROUND13_ROTATION],
-    )
-    assert derived14_unproven == []
-    assert ROUND14_ROTATION == derived14
-    assert len(set(ROUND14_ROTATION)) == 50
-    assert not set(ROUND14_ROTATION) & set(ROUND12_ROTATION)
-    assert not set(ROUND14_ROTATION) & set(ROUND13_ROTATION)
-    assert not set(ROUND14_ROTATION) & rows_only
+    # (a) the policy is pinned to driver history: r01-r12 derive the
+    # 50 names CORRECTNESS_r13 ran, in its row order
+    before_r13 = [a for a in artifacts if a[0] <= 12]
+    r13 = dict(artifacts)[13]
+    assert derive_next_window(before_r13, registered, oracles)[0] == list(r13)
 
-    # the LIVE window is the one the fourteen landed artifacts derive
-    # (r13 and r14 both re-checked the round-13 window, so this equals
-    # the round-14 plan above with nothing assumed)
-    every_round = all_rounds + [
-        os.path.join(repo_root, f"CORRECTNESS_{r}.json") for r in ("r13", "r14")
+    # (b) registration leads with the derivation over every artifact
+    window, unproven = derive_next_window(
+        artifacts, registered, oracles, PINNED
+    )
+    assert registered[:WINDOW] == window
+
+    # (c) a full window of distinct names; rows-only queries enter only
+    # as unproven, never as a re-confirm slot
+    assert len(window) == len(set(window)) == WINDOW
+    assert set(window) & rows_only <= set(unproven)
+
+    # (d) stalest first: every backfill slot is at least as stale as
+    # every SQL-oracle query left outside the window
+    latest = _latest(artifacts)
+    backfill = [n for n in window if n not in unproven and n not in PINNED]
+    outside = [
+        n for n in registered
+        if n in oracles and n not in unproven and n not in window
     ]
-    live, live_unproven = derive_next_window(every_round, registered, oracles)
-    assert live_unproven == []
-    assert VERIFY_ROTATION == live
+    assert backfill and outside
+    assert max(latest[n] for n in backfill) < min(latest[n] for n in outside)
 
-    # drain invariant: after round 13 runs, no SQL-oracle query has
-    # pre-r7 latest evidence, and the r7-latest overflow is exactly
-    # the r07 tail that provably cannot fit (the pool is ordered, so
-    # overflow = the names AFTER the window's last slot in r07 order)
-    latest: dict[str, int] = {}
-    r07_order: dict[str, int] = {}
-    for i, r in enumerate(
-        ("r01", "r02", "r03", "r04", "r05", "r06",
-         "r07", "r08", "r09", "r10", "r11", "r12")
-    ):
-        rows = json.load(open(os.path.join(repo_root, f"CORRECTNESS_{r}.json")))
-        for j, name in enumerate(rows):
-            latest[name] = i + 1
-            if r == "r07":
-                r07_order[name] = j
-    covered = set(ROUND13_ROTATION)
-    stale6 = {
-        q
-        for q, rnd in latest.items()
-        if rnd <= 6 and q in registered and q in oracles
-    }
-    assert stale6 <= covered, sorted(stale6 - covered)[:10]
-    stale7 = {
-        q
-        for q, rnd in latest.items()
-        if rnd == 7 and q in registered and q in oracles
-    }
-    spilled = stale7 - covered
-    max_covered_r07 = max(
-        (r07_order[q] for q in ROUND13_ROTATION if q in r07_order),
-        default=-1,
+    # a pin re-confirms oracle evidence; rows-only names cannot be pinned
+    assert {"q_sim_ivf_topk", "q_emb_pca_top"} <= rows_only
+    with pytest.raises(ValueError, match="q_emb_pca_top"):
+        derive_next_window(
+            artifacts, registered, oracles, {"q_emb_pca_top": 14}
+        )
+
+
+def test_new_artifact_moves_the_window(tmp_path):
+    """A new driver artifact moves the window at the next import, with
+    no code edit (the round-14 failure: a hand-kept window was never
+    activated, so a round re-ran the previous round's 50 names). On a
+    clone holding the package and the artifacts, a pin takes a slot,
+    and an artifact that proves the window green moves the head to the
+    next-stalest names and releases the pin, while a re-confirm that
+    comes back red leads the next window."""
+    import json
+    import os
+    import re
+    import shutil
+    import subprocess
+    import sys
+
+    from mapreduceframework_cpp_spark.registry import (
+        ROOT,
+        WINDOW,
+        all_oracles,
+        correctness_artifacts,
+        derive_next_window,
     )
-    assert all(r07_order[q] > max_covered_r07 for q in spilled), (
-        "a covered r07 slot was skipped in favor of a newer one",
-        sorted(spilled)[:10],
+
+    work = tmp_path / "repo"
+    shutil.copytree(
+        os.path.join(ROOT, "mapreduceframework_cpp_spark"),
+        work / "mapreduceframework_cpp_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
     )
+    artifacts = correctness_artifacts()
+    for rnd, _ in artifacts:
+        name = f"CORRECTNESS_r{rnd:02d}.json"
+        shutil.copy(os.path.join(ROOT, name), work / name)
+    last = artifacts[-1][0]
+
+    def head() -> list[str]:
+        p = subprocess.run(
+            [sys.executable, "-c",
+             "import json; from mapreduceframework_cpp_spark import registry;"
+             "print(json.dumps([registry.ROOT,"
+             " list(registry.all_queries())[:registry.WINDOW]]))"],
+            capture_output=True, text=True, cwd=work, check=True,
+        )
+        root, names = json.loads(p.stdout)
+        assert root == str(work)  # the clone's package, not the repo's
+        return names
+
+    assert head() == list(_QUERIES)[:WINDOW]
+
+    # pin the SQL-oracle query with the freshest evidence outside the
+    # window to the newest round: it takes a slot at once
+    oracles = set(all_oracles())
+    unproven = derive_next_window(artifacts, _QUERIES, oracles)[1]
+    latest = _latest(artifacts)
+    proven = [n for n in _QUERIES if n in oracles and n not in unproven]
+    pin = max(
+        (n for n in proven if n not in list(_QUERIES)[:WINDOW]),
+        key=lambda n: latest[n],
+    )
+    init = work / "mapreduceframework_cpp_spark" / "queries" / "__init__.py"
+    init.write_text(re.sub(
+        r"PINNED = \{.*?\n\}", f"PINNED = {{{pin!r}: {last}}}",
+        init.read_text(), count=1, flags=re.S,
+    ))
+    old = head()
+    assert pin in old
+
+    # the new round proves the window green except one re-confirm slot,
+    # which comes back with a hash mismatch
+    red = old[-1]
+    assert red in proven and red != pin and set(unproven) <= set(old)
+    (work / f"CORRECTNESS_r{last + 1}.json").write_text(json.dumps({
+        n: {"hash_match": n != red, "spark_rows": 1, "err": None}
+        for n in old
+    }))
+    new = head()
+    stalest = sorted((n for n in proven if n not in old),
+                     key=lambda n: latest[n])
+    assert new == ([red] + stalest)[:WINDOW]
+    assert pin not in new
+
+
+def test_artifact_loader_reads_only_round_files(tmp_path):
+    """Only CORRECTNESS_rNN.json names are artifacts, in numeric round
+    order; a truncated artifact fails the import loudly rather than
+    silently moving the window."""
+    import json
+
+    from mapreduceframework_cpp_spark.registry import correctness_artifacts
+
+    for rnd in (100, 11, 2):
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text(
+            json.dumps({f"q_{rnd}": {}})
+        )
+    (tmp_path / "CORRECTNESS_r15_partial.json").write_text("{")
+    (tmp_path / "CORRECTNESS_r16.json.bak").write_text("{")
+    assert correctness_artifacts(str(tmp_path)) == [
+        (2, {"q_2": {}}), (11, {"q_11": {}}), (100, {"q_100": {}})
+    ]
+    (tmp_path / "CORRECTNESS_r101.json").write_text("{")
+    with pytest.raises(json.JSONDecodeError):
+        correctness_artifacts(str(tmp_path))
 
 
 def test_readme_counts_match_registry():

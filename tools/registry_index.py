@@ -35,9 +35,7 @@ claim, or to the registry itself, still reds as before.
 
 from __future__ import annotations
 
-import glob
 import inspect
-import json
 import os
 import sys
 
@@ -47,29 +45,25 @@ sys.path.insert(0, REPO)
 OUT = os.path.join(REPO, "REGISTRY_INDEX.md")
 
 
-def _artifact_rounds() -> list[tuple[int, str]]:
-    out = []
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(os.path.basename(path).split("_r")[1].split(".")[0])
-        out.append((rnd, path))
-    return out
-
-
 def build(max_round: int | None = None) -> str:
-    from mapreduceframework_cpp_spark.registry import all_oracles, all_queries
+    from mapreduceframework_cpp_spark.registry import (
+        all_oracles,
+        all_queries,
+        correctness_artifacts,
+    )
 
     queries = all_queries()
     oracles = set(all_oracles())
 
-    rounds = _artifact_rounds()
+    rounds = correctness_artifacts()
     if max_round is None:
         max_round = max((rnd for rnd, _ in rounds), default=0)
 
     latest: dict[str, tuple[int, str]] = {}
-    for rnd, path in rounds:
+    for rnd, rows in rounds:
         if rnd > max_round:
             continue
-        for name, r in json.load(open(path)).items():
+        for name, r in rows.items():
             err = r.get("err")
             if r.get("hash_match"):
                 status = "hash"
