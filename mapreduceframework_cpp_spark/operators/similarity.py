@@ -1,9 +1,19 @@
 """Similarity search over embedding columns (SURVEY.md §2.2-K).
 
-Brute-force cosine top-k (the correctness baseline) and a random-
-hyperplane (sign-LSH) bucketed variant (the scale path). Dot products run
-through higher-order array functions (zip_with + aggregate) — JVM-side,
-no Python in the hot path.
+Brute-force cosine top-k and near-duplicate pairs (the correctness
+baselines) and bucketed variants (sign-LSH, IVF, label blocks: the scale
+paths).
+
+The two brute-force operators score TILES, never pair rows: rows hash
+into B blocks (B = the session's default parallelism), each tile — a
+block pair for near-dups, the query set × one candidate block for top-k
+— is one ``groupBy(tile).applyInArrow`` group, and a Python worker
+scores the whole tile with NumPy, emitting only the pairs its consumer
+keeps (over-threshold pairs, or a partial top-k). The dot products fold
+the d terms left to right exactly as the JVM-side ``_dot`` fold does, so
+every cosine is the same IEEE double and no ε band is needed around a
+threshold or the k-th score. The bucketed variants still score pair
+rows with ``_dot`` (zip_with + aggregate, JVM-side).
 
 Scale design: brute force is O(|Q|·|C|·d) — fine when the query set is
 small and broadcastable, impossible corpus×corpus. The LSH variant
@@ -15,9 +25,15 @@ is why the recall test uses clustered synthetic data.
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from mapreduceframework_cpp_spark.operators.common import spread
 
@@ -38,14 +54,178 @@ def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     and a 100 TB embedding table always contains some (failed encoder
     outputs, padding rows) — without the filter the ANSI cos division
     raises DIVIDE_BY_ZERO and one such row kills the whole job (r6
-    degenerate-corpus sweep). Every similarity operator routes through
-    here, so the exclusion is uniform on both query and candidate
-    sides; the SQL oracles carry the same ``> 0`` norm guard."""
+    degenerate-corpus sweep). The pair-row operators route through here
+    and the tile kernel applies the same exclusion (``_scored_rows``),
+    so it is uniform on both query and candidate sides; the SQL oracles
+    carry the same ``> 0`` norm guard."""
     v = _as_double(F.col(vec_col))
     return (
         emb.withColumn("_v", v)
         .withColumn("_norm", F.sqrt(_dot(F.col("_v"), F.col("_v"))))
         .filter(F.col("_norm") > 0)
+    )
+
+
+# --------------------------------------------------------------------------
+# Tile kernel: the brute-force operators score NumPy tiles in Python
+# workers and never build pair rows.
+# --------------------------------------------------------------------------
+
+
+class EmbeddingContractError(ValueError):
+    """An embedding broke the fixed-width contract: vectors of different
+    widths meet in one tile, or a vector holds a NULL element. The
+    ``_dot`` fold would silently null every cosine such a row touches;
+    the tile kernel refuses instead."""
+
+
+#: left rows a tile scores per step, so a tile's score matrix holds at
+#: most _CHUNK × (rows on the right) doubles
+_CHUNK = 64
+
+
+def _n_blocks(df: DataFrame) -> int:
+    return max(1, df.sparkSession.sparkContext.defaultParallelism)
+
+
+def _vector_rows(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    # a NULL embedding or id has no cosine: excluded like a zero vector
+    return df.filter(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull()).select(
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
+    )
+
+
+def _scored_rows(table: pa.Table) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """A tile's rows that have a cosine, as (row index, id, vector,
+    norm). Zero-norm rows are dropped; NaN norms stay, as Spark's
+    ``_norm > 0`` keeps them. Raises EmbeddingContractError on a NULL
+    element or on rows of different widths."""
+    vecs = table.column("_v").combine_chunks()
+    values = vecs.flatten()
+    if values.null_count:
+        raise EmbeddingContractError("an embedding vector holds a NULL element")
+    widths = vecs.value_lengths().to_numpy()
+    if (widths != widths[0]).any():
+        raise EmbeddingContractError(
+            f"embedding widths differ: {sorted(set(widths.tolist()))}"
+        )
+    v = values.to_numpy(zero_copy_only=False).astype(np.float64)
+    v = v.reshape(len(vecs), int(widths[0]))
+    sq = np.zeros(len(v))
+    for j in range(v.shape[1]):  # _dot(v, v)'s order, as in _cosines
+        sq += v[:, j] * v[:, j]
+    norms = np.sqrt(sq)
+    keep = np.flatnonzero(norms != 0)
+    ids = table.column("_id").to_numpy()
+    return keep, ids[keep], v[keep], norms[keep]
+
+
+def _cosines(a, na, b, nb) -> np.ndarray:
+    """Every (a row, b row) cosine as ``_dot(va, vb) / (na * nb)``. Each
+    dot product sums its d terms left to right from 0.0 — the order of
+    ``_dot``'s aggregate, one rounded product and one rounded add per
+    term (no BLAS reassociation, no fused multiply-add) — so every
+    entry is the double the JVM fold computes."""
+    acc = np.zeros((len(a), len(b)))
+    term = np.empty_like(acc)
+    for j in range(a.shape[1]):
+        np.multiply.outer(a[:, j], b[:, j], out=term)
+        acc += term
+    return acc / np.multiply.outer(na, nb)
+
+
+def _table(names: list[str], types: list, parts: list[list[np.ndarray]]) -> pa.Table:
+    """One Arrow table from each column's per-chunk NumPy pieces."""
+    return pa.table(
+        [pa.array(np.concatenate(p) if p else [], t) for p, t in zip(parts, types)],
+        names=names,
+    )
+
+
+def _near_dup_tile(key, table: pa.Table, threshold: float, id_type) -> pa.Table:
+    """Pairs of one block-pair tile (lo, hi) with cos ≥ threshold (or
+    NaN cos, which Spark's ``NaN >= θ`` keeps), as (least id, greatest
+    id, cos). A diagonal tile pairs its block with itself, once per
+    ``id_a < id_b``."""
+    lo, hi = key[0].as_py(), key[1].as_py()
+    rows, ids, v, n = _scored_rows(table)
+    blk = table.column("_blk").to_numpy()[rows]
+    left = np.flatnonzero(blk == lo)
+    right = np.flatnonzero(blk == hi)
+    if lo == hi:  # sorted by id, a chunk only needs the rows from itself on
+        left = right = left[np.argsort(ids[left], kind="stable")]
+    out_a, out_b, out_c = [], [], []
+    for s in range(0, len(left), _CHUNK):
+        a = left[s : s + _CHUNK]
+        b = right[s:] if lo == hi else right
+        cos = _cosines(v[a], n[a], v[b], n[b])
+        keep = np.isnan(cos) | (cos >= threshold)
+        if lo == hi:
+            keep &= np.less.outer(ids[a], ids[b])
+        i, j = np.nonzero(keep)
+        ia, ib = ids[a][i], ids[b][j]
+        out_a.append(np.minimum(ia, ib))
+        out_b.append(np.maximum(ia, ib))
+        out_c.append(cos[i, j])
+    return _table(
+        ["vec_id_a", "vec_id_b", "_cos"], [id_type, id_type, pa.float64()],
+        [out_a, out_b, out_c],
+    )
+
+
+def _topk_tile(table: pa.Table, k: int, q_type, c_type) -> pa.Table:
+    """The query rows (``_side`` 0) × one candidate block (``_side`` 1):
+    each query's k best candidates in this block by (cos DESC with NaN
+    first, as Spark orders it; cand id ASC), self pairs excluded."""
+    rows, ids, v, n = _scored_rows(table)
+    side = table.column("_side").to_numpy()[rows]
+    q = np.flatnonzero(side == 0)
+    c = np.flatnonzero(side == 1)
+    cid = ids[c]
+    out_q, out_c, out_s = [], [], []
+    for s in range(0, len(q), _CHUNK):
+        a = q[s : s + _CHUNK]
+        cos = _cosines(v[a], n[a], v[c], n[c])
+        self_pair = np.equal.outer(ids[a], cid)
+        order = np.lexsort(
+            (np.broadcast_to(cid, cos.shape), -cos, ~np.isnan(cos), self_pair),
+            axis=-1,
+        )[:, :k]
+        r = np.arange(len(a))[:, None]
+        i, j = np.nonzero(~self_pair[r, order])
+        out_q.append(ids[a][i])
+        out_c.append(cid[order[i, j]])
+        out_s.append(cos[i, order[i, j]])
+    return _table(
+        ["query_id", "cand_id", "_cos"], [q_type, c_type, pa.float64()],
+        [out_q, out_c, out_s],
+    )
+
+
+def _tile_topk(
+    queries: DataFrame, candidates: DataFrame, k: int, vec_col: str, id_col: str
+) -> DataFrame:
+    """Each tile's partial top-k: (query_id, cand_id, _cos), at most
+    |Q|·k rows per candidate block, so at most |Q|·k·B rows in all."""
+    b = _n_blocks(candidates)
+    q_type = queries.schema[id_col].dataType
+    c_type = candidates.schema[id_col].dataType
+    q = _vector_rows(queries, vec_col, id_col).select(
+        "_id", "_v", F.lit(0).alias("_side"),
+        F.explode(F.sequence(F.lit(0), F.lit(b - 1))).alias("_blk"),
+    )
+    c = _vector_rows(candidates, vec_col, id_col).select(
+        "_id", "_v", F.lit(1).alias("_side"),
+        F.pmod(F.hash("_id"), F.lit(b)).alias("_blk"),
+    )
+    q_arrow, c_arrow = to_arrow_type(q_type), to_arrow_type(c_type)
+    return q.unionByName(c).groupBy("_blk").applyInArrow(
+        lambda t: _topk_tile(t, k, q_arrow, c_arrow),
+        StructType([
+            StructField("query_id", q_type),
+            StructField("cand_id", c_type),
+            StructField("_cos", DoubleType()),
+        ]),
     )
 
 
@@ -56,25 +236,11 @@ def cosine_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors per query vector (brute force).
-    Output: query_id, cand_id, cos_sim (rounded 6dp), rank."""
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("_v").alias("_qv"),
-        F.col("_norm").alias("_qn"),
-    )
-    c = with_norm(spread(candidates, id_col), vec_col).select(
-        F.col(id_col).alias("cand_id"),
-        F.col("_v").alias("_cv"),
-        F.col("_norm").alias("_cn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("cand_id"))
-        .withColumn(
-            "_cos", _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-        )
-    )
+    """Exact top-k cosine neighbors per query vector (brute force). The
+    query set is broadcastable by contract: it joins every candidate
+    block's tile, and the rank window merges the tiles' partial top-k
+    lists. Output: query_id, cand_id, cos_sim (rounded 6dp), rank."""
+    scored = _tile_topk(queries, candidates, k, vec_col, id_col)
     w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("cand_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -255,32 +421,46 @@ def ivf_topk(
     )
 
 
+def _tile_near_dups(
+    emb: DataFrame, threshold: float, vec_col: str, id_col: str
+) -> DataFrame:
+    """Unrounded near-dup pairs (vec_id_a < vec_id_b, _cos). A row in
+    block b joins the B tiles (least(b, o), greatest(b, o)) for every
+    block o, so each block pair i ≤ j meets in exactly one tile."""
+    b = _n_blocks(emb)
+    id_type = emb.schema[id_col].dataType
+    id_arrow = to_arrow_type(id_type)
+    blk = F.pmod(F.hash("_id"), F.lit(b))
+    other = F.explode(F.sequence(F.lit(0), F.lit(b - 1)))
+    tiles = (
+        _vector_rows(emb, vec_col, id_col)
+        .select("_id", "_v", blk.alias("_blk"), other.alias("_o"))
+        .select(
+            "_id", "_v", "_blk",
+            F.least("_blk", "_o").alias("_lo"), F.greatest("_blk", "_o").alias("_hi"),
+        )
+    )
+    return tiles.groupBy("_lo", "_hi").applyInArrow(
+        lambda key, t: _near_dup_tile(key, t, threshold, id_arrow),
+        StructType([
+            StructField("vec_id_a", id_type),
+            StructField("vec_id_b", id_type),
+            StructField("_cos", DoubleType()),
+        ]),
+    )
+
+
 def embedding_near_dups(
     emb: DataFrame, threshold: float = 0.4, vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """All pairs with cosine ≥ threshold (brute-force at test scale; the
-    LSH bucketing above is the drop-in candidate generator at 100 TB)."""
-    # the inequality-only join is a nested loop: make the SPREAD side
-    # the streamed side (full task parallelism for the O(n²/2) cosine
-    # work) and broadcast the build side explicitly — otherwise the
-    # planner may stream the single byte-provisioned scan task and
-    # serialize the whole pair scan (measured 19.5s -> 1.3s at sf0.1)
-    a = with_norm(spread(emb, id_col), vec_col).select(
-        F.col(id_col).alias("vec_id_a"), F.col("_v").alias("_va"), F.col("_norm").alias("_na")
-    )
-    b = F.broadcast(
-        with_norm(emb, vec_col).select(
-            F.col(id_col).alias("vec_id_b"),
-            F.col("_v").alias("_vb"),
-            F.col("_norm").alias("_nb"),
-        )
-    )
-    return (
-        a.join(b, F.col("vec_id_a") < F.col("vec_id_b"))
-        .withColumn("_cos", _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")))
-        .filter(F.col("_cos") >= threshold)
-        .select("vec_id_a", "vec_id_b", F.round("_cos", 6).alias("cos_sim"))
+    """All pairs with cosine ≥ threshold (exact all-pairs over tiles of
+    the corpus; the LSH bucketing above is the drop-in candidate
+    generator at 100 TB). Only over-threshold pairs leave a tile, so
+    the pair space is never materialized as rows. Output: vec_id_a <
+    vec_id_b, cos_sim (rounded 6dp)."""
+    return _tile_near_dups(emb, threshold, vec_col, id_col).select(
+        "vec_id_a", "vec_id_b", F.round("_cos", 6).alias("cos_sim")
     )
 
 
@@ -403,3 +583,9 @@ def kmeans_cluster_report(
         )
         .withColumn("cluster", F.col("cluster").cast("long"))
     )
+
+
+# The tile functions run in Python workers: ship this module by value so
+# they need no importable package on the executors' PYTHONPATH
+# (operators/multimodal.py does the same).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

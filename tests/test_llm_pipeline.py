@@ -1069,6 +1069,49 @@ def test_lsh_plane_dot_product_cross_engine_exact(spark, duck, oracle_sf_dir):
             assert bits(a) == bits(b), (vid, j, a, b)
 
 
+def test_tile_cosines_bit_identical_to_dot_fold(spark, oracle_sf_dir):
+    """The tile kernel folds each dot product left to right in NumPy;
+    every raw cosine must be the IEEE double the JVM ``_dot`` fold gives,
+    ``_dot(va, vb) / (na * nb)``, on the real oracle-scale embeddings —
+    exact equality, so no ε band is needed around the near-dup threshold
+    or the k-th top-k score. Covers both tile consumers."""
+    import struct as _struct
+
+    from mapreduceframework_cpp_spark.operators.similarity import (
+        _dot,
+        _tile_near_dups,
+        _tile_topk,
+        with_norm,
+    )
+
+    emb = spark.read.parquet(f"{oracle_sf_dir}/embeddings.parquet")
+    a = with_norm(emb).select(
+        F.col("vec_id").alias("ia"), F.col("_v").alias("va"), F.col("_norm").alias("na")
+    )
+    b = with_norm(emb).select(
+        F.col("vec_id").alias("ib"), F.col("_v").alias("vb"), F.col("_norm").alias("nb")
+    )
+    cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    want = {
+        (r.ia, r.ib): r.cos
+        for r in a.join(b, F.col("ia") < F.col("ib")).select("ia", "ib", cos.alias("cos")).collect()
+    }
+    got = {
+        (r.vec_id_a, r.vec_id_b): r._cos
+        for r in _tile_near_dups(emb, float("-inf"), "embedding", "vec_id").collect()
+    }
+    bits = lambda f: _struct.pack("<d", f)  # noqa: E731 - bit-exact lens
+    assert len(want) == 500 * 499 // 2 and got.keys() == want.keys()
+    assert all(bits(got[p]) == bits(want[p]) for p in want)
+
+    q = emb.filter(F.col("vec_id") % 50 == 0)
+    top = _tile_topk(q, emb, 10_000, "embedding", "vec_id").collect()
+    assert len(top) == 10 * 499
+    for r in top:
+        pair = (min(r.query_id, r.cand_id), max(r.query_id, r.cand_id))
+        assert bits(r._cos) == bits(want[pair]), (r.query_id, r.cand_id)
+
+
 def test_fingerprint_oracle_parity_on_null_and_degenerate_text(spark):
     """ADVICE r8 (medium): the q_text_fingerprint oracle filters
     ``WHERE text IS NOT NULL`` but the engine used to emit a

@@ -80,11 +80,27 @@ def test_topk_plans_as_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in p
 
 
-def test_sim_topk_broadcasts_query_side(spark, sf_dir):
-    """Brute-force scoring must broadcast the (small) query set so the
-    candidate corpus never shuffles."""
-    p = plan(_Q["q_sim_topk"](spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
+def test_pair_scans_build_no_pair_rows(spark, sf_dir):
+    """The brute-force similarity queries score tiles in one grouped
+    Arrow stage: no nested-loop or cartesian join materializes pairs as
+    rows, and top-k's rank window merges each tile's partial top-k —
+    at most |Q|·k·B rows, not |Q|·|C|."""
+    import pyspark.sql.functions as F
+
+    from mapreduceframework_cpp_spark.operators.similarity import _n_blocks, _tile_topk
+    from mapreduceframework_cpp_spark.sources.tables import tbl
+
+    for name in ("q_sim_topk", "q_dedup_embedding"):
+        p = plan(_Q[name](spark, sf_dir))
+        assert "FlatMapGroupsInArrow" in p, name
+        for pair_join in ("BroadcastNestedLoopJoin", "CartesianProduct"):
+            assert pair_join not in p, (name, pair_join)
+
+    emb = tbl(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") % 50 == 0)
+    n_q, n_c, k = q.count(), emb.count(), 5
+    fed = _tile_topk(q, emb, k, "embedding", "vec_id").count()
+    assert fed <= n_q * k * _n_blocks(emb) < n_q * (n_c - 1), (fed, n_q, n_c)
 
 
 def test_projection_stays_in_codegen(spark, sf_dir):

@@ -477,6 +477,91 @@ def test_similarity_ops_tolerate_zero_vectors(spark):
     assert ivf and all(r.query_id != 99 and r.cand_id != 99 for r in ivf)
 
 
+def _small_corpus(spark, extra):
+    rows = [(i, [float((i + j) % 5) / 4 + 0.1 for j in range(8)]) for i in range(12)]
+    return spark.createDataFrame(rows + extra, "vec_id long, embedding array<float>")
+
+
+@pytest.mark.parametrize(
+    "bad, why",
+    [
+        ((50, [0.5] * 7), "embedding widths differ"),  # ragged width
+        ((51, [0.5] * 7 + [None]), "an embedding vector holds a NULL element"),
+    ],
+)
+def test_pair_kernel_refuses_broken_vectors(spark, bad, why):
+    """A vector of another width, or one with a NULL element, breaks the
+    fixed-width contract. The JVM ``_dot`` fold turned either into a
+    silent NULL (a NULL cosine that drops a near-dup pair or ranks in
+    top-k, or a NULL norm that drops the row); the tile kernel raises a
+    named error instead."""
+    from mapreduceframework_cpp_spark.operators.similarity import (
+        cosine_topk,
+        embedding_near_dups,
+    )
+
+    emb = _small_corpus(spark, [bad])
+    for run in (
+        lambda: embedding_near_dups(emb, threshold=0.5).collect(),
+        lambda: cosine_topk(emb, emb, k=3).collect(),
+    ):
+        with pytest.raises(Exception, match=f"EmbeddingContractError: {why}"):
+            run()
+
+
+@pytest.mark.parametrize("blocks", [1, None])
+def test_pair_kernel_keeps_spark_nan_semantics(spark, monkeypatch, blocks):
+    """A NaN element gives NaN cosines. Spark's ``NaN >= θ`` is true and
+    DESC puts NaN first (the DuckDB oracle orders NaN the same way), so
+    the pre-kernel pair rows kept every NaN pair as a near-dup and
+    ranked the NaN vector first for every query; the kernel must too.
+    One block makes each tile's own top-k the final one."""
+    from mapreduceframework_cpp_spark.operators import similarity as S
+    from mapreduceframework_cpp_spark.operators.similarity import (
+        cosine_topk,
+        embedding_near_dups,
+    )
+
+    if blocks:
+        monkeypatch.setattr(S, "_n_blocks", lambda df: blocks)
+    emb = _small_corpus(spark, [(50, [0.5] * 7 + [float("nan")])])
+    near = embedding_near_dups(emb, threshold=0.5).collect()
+    nan_pairs = sorted((r.vec_id_a, r.vec_id_b) for r in near if r.cos_sim != r.cos_sim)
+    assert nan_pairs == [(i, 50) for i in range(12)]
+    assert all(r.cos_sim >= 0.5 for r in near if r.cos_sim == r.cos_sim)
+
+    top = cosine_topk(emb, emb, k=2).collect()
+    for r in top:
+        if r.query_id == 50:  # every score NaN: ties break by cand_id
+            assert (r.cand_id, r.rank) in {(0, 1), (1, 2)} and r.cos_sim != r.cos_sim
+        elif r.rank == 1:
+            assert r.cand_id == 50 and r.cos_sim != r.cos_sim
+        else:
+            assert r.cand_id != 50 and r.cos_sim == r.cos_sim
+    assert len(top) == 13 * 2
+
+
+def test_pair_kernel_tiling_invariant(spark, oracle_sf_dir, monkeypatch):
+    """Rows must not depend on how the corpus is tiled: one block (a
+    single diagonal tile), many blocks (mostly off-diagonal tiles,
+    candidate blocks smaller than k) and a left chunk that splits every
+    tile give the same near-dup pairs and top-k lists."""
+    from mapreduceframework_cpp_spark.operators import similarity as S
+    from mapreduceframework_cpp_spark.registry import all_queries
+
+    Q = all_queries()
+    results = []
+    for blocks, chunk in ((1, 64), (4, 7), (101, 64)):
+        monkeypatch.setattr(S, "_n_blocks", lambda df, b=blocks: b)
+        monkeypatch.setattr(S, "_CHUNK", chunk)
+        results.append([
+            sorted(map(tuple, Q[n](spark, oracle_sf_dir).collect()))
+            for n in ("q_dedup_embedding", "q_sim_topk")
+        ])
+    assert results[0] == results[1] == results[2]
+    assert all(results[0])
+
+
 def test_bpe_tolerates_single_and_empty_token_docs(spark):
     """Single-symbol docs contribute no adjacent pairs; without the
     size guard sequence(0, -1) materializes DESCENDING and the ANSI
@@ -531,6 +616,7 @@ def test_ops_tolerate_null_rows(spark):
         extract_features,
     )
     from mapreduceframework_cpp_spark.operators.similarity import (
+        embedding_near_dups,
         ivf_topk,
         kmeans_cluster_report,
     )
@@ -556,3 +642,7 @@ def test_ops_tolerate_null_rows(spark):
     assert rep.agg(F.sum("n_members")).first()[0] == 12  # null excluded
     ivf = ivf_topk(emb, emb, k=2, n_cells=2, n_probe=2).collect()
     assert ivf and all(r.query_id != 98 and r.cand_id != 98 for r in ivf)
+    top = cosine_topk(emb, emb, k=2).collect()
+    assert len(top) == 12 * 2 and all(98 not in (r.query_id, r.cand_id) for r in top)
+    near = embedding_near_dups(emb, threshold=0.5).collect()
+    assert near and all(98 not in (r.vec_id_a, r.vec_id_b) for r in near)
