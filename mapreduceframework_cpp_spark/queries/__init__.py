@@ -58,6 +58,12 @@ PINNED = {
     "q_sim_lsh_topk": 14,
     "q_graph_pagerank": 14,
     "q_graph_purchase_rank": 14,
+    "q_sink_python": 14,
+    "q_sink_time_travel": 14,
+    "q_sink_changes": 14,
+    "q_sink_delete_vectors": 14,
+    "q_sink_checkpoint_read": 14,
+    "q_sink_change_feed": 14,
 }
 
 registry.reorder(

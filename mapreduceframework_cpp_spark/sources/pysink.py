@@ -107,6 +107,16 @@ Round-13 extensions widen change consumption and DV maintenance:
   row-delta form); without the option the strict append-only refusals
   are unchanged.
 
+One snapshot fold: :func:`_fold_state` is the only replay of the
+manifest log into table state (live files, deletion vectors, schema and
+column map, clustering, writer styles), one per-commit step
+(`_fold_step`) over the generation from the latest ``replaces`` on
+(`_gen_cut`). The current snapshot folds the latest checkpoint plus its
+tail; time travel (``as_of``) folds the first ``as_of`` visible commits
+with the same step. Every read plans from ONE fold result, so a commit
+landing mid-plan gives it the old snapshot or the new, never old files
+under the new generation's deletion vectors.
+
 Cluster notes (local mode shares one filesystem; on a real cluster):
 ``path`` must be shared storage reachable from executors and driver.
 On object stores without atomic rename, the manifest is already the
@@ -126,7 +136,7 @@ import shutil
 import sys
 import tempfile
 import uuid
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 
 from pyspark import cloudpickle as _cloudpickle
@@ -533,7 +543,9 @@ def _claim_slot_commit(
             return
 
 
-def _reclaim_invisible(path: str, min_age_s: float = 0.0) -> int:
+def _reclaim_invisible(
+    path: str, log: list[tuple[str, dict]], min_age_s: float = 0.0
+) -> tuple[int, list[tuple[str, dict]]]:
     """Physically delete manifests (and their files) superseded by the
     latest ``replaces`` marker — but only once the replacing commit is
     at least ``min_age_s`` old. Superseded files are invisible to NEW
@@ -543,27 +555,23 @@ def _reclaim_invisible(path: str, min_age_s: float = 0.0) -> int:
     files (ADVICE r10 — this is why commits never reclaim inline;
     only ``vacuum`` calls this). Crash-safe: everything here is
     already invisible, so dying mid-way changes nothing a reader of
-    the log can observe. Returns the number of files removed."""
+    the log can observe. ``log`` is the (manifest path, doc) pairs on
+    disk in name order; returns (files removed, the pairs still on
+    disk)."""
     import time
 
-    txn = os.path.join(path, _TXN)
-    names = sorted(glob.glob(os.path.join(txn, "manifest-*.json")))
-    docs = [json.load(open(m)) for m in names]
-    cut = 0
-    for i, d in enumerate(docs):
-        if d.get("replaces"):
-            cut = i
-    if cut == 0:
-        return 0
+    cut = _gen_cut([d for _, d in log])
+    if cut <= 0:
+        return 0, log
     try:
         # age of the SUPERSEDING commit, not the superseded files: the
         # retention clock starts when visibility was lost
-        if os.path.getmtime(names[cut]) > time.time() - min_age_s:
-            return 0
+        if os.path.getmtime(log[cut][0]) > time.time() - min_age_s:
+            return 0, log
     except OSError:
-        return 0
+        return 0, log
     removed = 0
-    for m, d in zip(names[:cut], docs[:cut]):
+    for m, d in log[:cut]:
         for f in d["files"]:
             old = os.path.join(path, f)
             if os.path.exists(old):
@@ -576,7 +584,7 @@ def _reclaim_invisible(path: str, min_age_s: float = 0.0) -> int:
                 removed += 1
         os.remove(m)
         removed += 1
-    return removed
+    return removed, log[cut:]
 
 
 def _publish(
@@ -795,12 +803,12 @@ def _prune_range(f) -> tuple[str | None, tuple]:
     return None, ()
 
 
-def _read_renames(path: str, columns: tuple) -> tuple:
+def _read_renames(st: dict, columns: tuple) -> tuple:
     """The column-mapping translation a scan of ``columns`` needs:
     ((logical, physical), ...) limited to fields that actually differ
     — () for never-renamed tables, so the common case stays
-    zero-cost. Resolved once at plan time from the fold."""
-    ren = _phys_map(_fold_state(path)["fields"])
+    zero-cost. Resolved once at plan time from the fold ``st``."""
+    ren = _phys_map(st["fields"])
     return tuple((c, ren[c]) for c in columns if c in ren)
 
 
@@ -854,12 +862,19 @@ class _TxnReader(DataSourceReader):
         return True
 
     def partitions(self) -> list[_PartFile]:
-        dvs = tuple(committed_dvs(self.path, as_of=self.as_of))
-        ren = _read_renames(self.path, self.columns)
+        st = _fold_state(self.path, self.as_of)
+        # an asOf read serves the CURRENT logical schema, so it keeps
+        # the current fold's column map
+        cur = st if self.as_of is None else _fold_state(self.path)
+        ren = _read_renames(cur, self.columns)
         self._ren = dict(ren)
+        dvs = tuple(_abs(self.path, st["dvs"]))
         return [
-            _PartFile(e["name"], self.columns, self.schema_json, dvs, ren)
-            for e in committed_entries(self.path, as_of=self.as_of)
+            _PartFile(
+                os.path.join(self.path, name), self.columns,
+                self.schema_json, dvs, ren,
+            )
+            for name, e in st["entries"].items()
             if self._keep(e)
         ]
 
@@ -943,29 +958,34 @@ def _read_part(partition: _PartFile):  # noqa: ANN201
                     batch = batch.filter(pa.array(keep))
             else:
                 row_offset += batch.num_rows
-            if target is None:
-                yield batch
-                continue
-            if batch.schema == target:  # fast path: no evolution needed
-                yield batch
-                continue
-            names = batch.schema.names
-            arrays = []
-            for field in target:
-                if field.name in names:
-                    col = batch.column(names.index(field.name))
-                    arrays.append(
-                        col if col.type == field.type else col.cast(field.type)
-                    )
-                else:
-                    arrays.append(pa.nulls(batch.num_rows, type=field.type))
-            yield pa.RecordBatch.from_arrays(arrays, schema=target)
+            yield batch if target is None else _conform(batch, target)
     else:
         ren = dict(partition.rename) if partition.rename else {}
         with open(partition.file) as fh:
             for line in fh:
                 d = json.loads(line)
                 yield tuple(d.get(ren.get(c, c)) for c in partition.columns)
+
+
+def _conform(batch, target):  # noqa: ANN001, ANN201 - pyarrow batch/schema
+    """A RecordBatch conformed to the READ schema ``target``: columns
+    the file predates are padded with typed nulls, widened columns cast
+    up (schema evolution at scan time)."""
+    import pyarrow as pa
+
+    if batch.schema == target:  # fast path: no evolution needed
+        return batch
+    names = batch.schema.names
+    arrays = []
+    for field in target:
+        if field.name in names:
+            col = batch.column(names.index(field.name))
+            arrays.append(
+                col if col.type == field.type else col.cast(field.type)
+            )
+        else:
+            arrays.append(pa.nulls(batch.num_rows, type=field.type))
+    return pa.RecordBatch.from_arrays(arrays, schema=target)
 
 
 def _read_cdf_part(partition: _CDFPart):  # noqa: ANN201
@@ -1057,21 +1077,7 @@ def _read_positions(partition: _CDFPart):  # noqa: ANN201
         row_offset += batch.num_rows
         if not keep.any():
             continue
-        batch = batch.filter(pa.array(keep))
-        if batch.schema == target:
-            yield batch
-            continue
-        names = batch.schema.names
-        arrays = []
-        for field in target:
-            if field.name in names:
-                col = batch.column(names.index(field.name))
-                arrays.append(
-                    col if col.type == field.type else col.cast(field.type)
-                )
-            else:
-                arrays.append(pa.nulls(batch.num_rows, type=field.type))
-        yield pa.RecordBatch.from_arrays(arrays, schema=target)
+        yield _conform(batch.filter(pa.array(keep)), target)
 
 
 def _cdf_parts_for(
@@ -1157,17 +1163,18 @@ class _TxnChangesReader(DataSourceReader):
     (``option("changesFrom", m).option("changesTo", n)``): the rows
     committed in visible snapshots (m, n] — the same window contract as
     :func:`read_changes` (Delta CDF / Iceberg incremental-scan shape),
-    with the same refusals: a delta (merge), deletion-vector, or
-    replaces commit inside the window cannot be served as appends and
-    raises at plan time.
+    with the same planner (`_append_window`): a delta (merge) or
+    deletion-vector commit inside the window cannot be served as
+    appends and raises at plan time. Snapshots count the visible log,
+    which starts at the latest ``replaces``, so no window ever spans a
+    history truncation.
 
     With ``option("readChangeFeed", "true")`` (round-13 — Delta CDF /
     Iceberg changelog scan) the same window serves ROW-LEVEL CHANGES
     instead: appends as inserts, a DV commit's newly masked positions
     as deletes, a delta commit's removed files' then-live rows as
     deletes plus its added files as inserts; each row carries
-    ``_change_type`` / ``_commit_version``. A mid-window ``replaces``
-    still refuses — a history truncation has no row-delta form."""
+    ``_change_type`` / ``_commit_version``."""
 
     def __init__(
         self, path: str, schema, frm: int, to: int, cdf: bool = False
@@ -1178,64 +1185,30 @@ class _TxnChangesReader(DataSourceReader):
         data_schema = StructType(data_fields)
         self.columns = tuple(data_schema.fieldNames())
         self.schema_json = data_schema.json()
+        _check_window(frm, to)
         self.frm = frm
         self.to = to
 
     def partitions(self) -> list[InputPartition]:
-        pairs = _visible(self.path)
-        docs = [d for _, d in pairs]
-        ren = _read_renames(self.path, self.columns)
-        if self.frm > 0 and any(d.get("replaces") for d in docs[self.frm:self.to]):
-            raise ValueError(
-                f"{self.path}: a replaces commit lies inside the change "
-                "window — history was truncated; re-baseline the feed"
-            )
-        if self.cdf:
-            prior = []
-            for d in docs[: self.frm]:
-                if d.get("dv"):
-                    prior = (
-                        [d["dv"]] if d.get("dv_replaces") else prior + [d["dv"]]
-                    )
-            parts: list[InputPartition] = []
-            for m, d in pairs[self.frm:self.to]:
-                ver = _seq_of(os.path.basename(m))
-                parts.extend(
-                    _cdf_parts_for(
-                        self.path, ver, d, prior,
-                        self.columns, self.schema_json, rename=ren,
-                    )
-                )
-                if d.get("dv"):
-                    prior = (
-                        [d["dv"]] if d.get("dv_replaces") else prior + [d["dv"]]
-                    )
-            return parts
-        parts = []
-        for d in docs[self.frm:self.to]:
-            if d.get("removes"):
-                raise ValueError(
-                    f"{self.path}: a delta commit (merge) lies inside "
-                    "the change window — its files rewrite earlier "
-                    "commits' rows and cannot be consumed as appends; "
-                    'option("readChangeFeed", "true") serves it as '
-                    "row-level deletes + inserts"
-                )
-            if d.get("dv"):
-                raise ValueError(
-                    f"{self.path}: a deletion-vector commit lies inside "
-                    "the change window — it retracts earlier commits' "
-                    "rows, which an append-only feed cannot express; "
-                    'option("readChangeFeed", "true") serves the '
-                    "masked rows as deletes"
-                )
+        ren = _read_renames(_fold_state(self.path), self.columns)
+        if not self.cdf:
+            return [
+                _PartFile(f, self.columns, self.schema_json, (), ren)
+                for f in _append_window(self.path, self.frm, self.to)
+            ]
+        # the state before commit frm, walked forward one commit at a
+        # time: each commit's removed files exclude the rows masked by
+        # the DVs visible BEFORE it (those were emitted as deletes)
+        st = _fold_state(self.path, as_of=self.frm)
+        parts: list[InputPartition] = []
+        for name, d in st["later"][: self.to - self.frm]:
             parts.extend(
-                _PartFile(
-                    os.path.join(self.path, f), self.columns,
-                    self.schema_json, (), ren,
+                _cdf_parts_for(
+                    self.path, _seq_of(name), d, st["dvs"],
+                    self.columns, self.schema_json, rename=ren,
                 )
-                for f in d["files"]
             )
+            _fold_step(st, name, d)
         return parts
 
     def read(self, partition):  # noqa: ANN001, ANN201
@@ -1245,6 +1218,28 @@ class _TxnChangesReader(DataSourceReader):
             yield from _read_cdf_part(partition)
             return
         yield from _read_part(partition)
+
+
+def _stream_names(path: str) -> list[str]:
+    """The manifest names a streaming source addresses, in order.
+    Offsets are NAMES, so name order must be unambiguous commit order:
+    legacy-width sequences interleave lexicographically, and a legacy
+    log where two batch commits share a sequence (pre-slot-claim uuid
+    names — ADVICE r11) can place a not-yet-consumed name at or before
+    the checkpointed offset, permanently dropping that commit from
+    every future window. Both are undetectable later, so refuse them
+    up front."""
+    names = [os.path.basename(m) for m in _manifests(path)]
+    _check_seq_width(path)
+    seqs = [_seq_of(n) for n in names]
+    if len(set(seqs)) != len(seqs):
+        raise ValueError(
+            f"{path}: two manifests share a sequence number — "
+            "a legacy same-sequence log cannot be streamed "
+            "unambiguously (offsets are names); rewrite the table "
+            "to a fresh path"
+        )
+    return names
 
 
 class _TxnStreamReader(DataSourceStreamReader):
@@ -1298,24 +1293,8 @@ class _TxnStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> list[_PartFile]:
         lo, hi = start["last"], end["last"]
-        names = [os.path.basename(m) for m in _manifests(self.path)]
-        # offsets are NAMES, so name order must be unambiguous commit
-        # order: legacy-width sequences interleave lexicographically,
-        # and a legacy log where two batch commits share a sequence
-        # (pre-slot-claim uuid names — ADVICE r11) can place a
-        # not-yet-consumed name at or before the checkpointed offset,
-        # permanently dropping that commit from every future window.
-        # Both are undetectable later, so refuse them up front.
-        _check_seq_width(self.path)
-        seqs = [_seq_of(n) for n in names]
-        if len(set(seqs)) != len(seqs):
-            raise ValueError(
-                f"{self.path}: two manifests share a sequence number — "
-                "a legacy same-sequence log cannot be streamed "
-                "unambiguously (offsets are names); rewrite the table "
-                "to a fresh path"
-            )
-        ren = _read_renames(self.path, self.columns)
+        names = _stream_names(self.path)
+        ren = _read_renames(_fold_state(self.path), self.columns)
         parts: list[_PartFile] = []
         for name in names:
             if not (lo < name <= hi):
@@ -1410,35 +1389,22 @@ class _TxnCDFStreamReader(_TxnStreamReader):
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         lo, hi = start["last"], end["last"]
-        names = [os.path.basename(m) for m in _manifests(self.path)]
-        _check_seq_width(self.path)
-        seqs = [_seq_of(n) for n in names]
-        if len(set(seqs)) != len(seqs):
-            raise ValueError(
-                f"{self.path}: two manifests share a sequence number — "
-                "a legacy same-sequence log cannot be streamed "
-                "unambiguously (offsets are names); rewrite the table "
-                "to a fresh path"
-            )
-        window = [n for n in names if lo < n <= hi]
-        ren = _read_renames(self.path, self.columns)
+        names = _stream_names(self.path)
+        ren = _read_renames(_fold_state(self.path), self.columns)
         docs = [
-            (n, _load_doc(os.path.join(self.path, _TXN, n))) for n in window
+            (n, _load_doc(os.path.join(self.path, _TXN, n)))
+            for n in names
+            if lo < n <= hi
         ]
-        prior: list[str] | None = None
+        # the DVs visible before each commit, by the fold's own step;
+        # only a merge's removed files need them, so the log prefix is
+        # walked only when a merge is in the window
+        st = _base_state()
         if any(d.get("removes") for _, d in docs):
-            # one-time prefix fold, only when a merge is in the window
-            prior = []
             for n in names:
                 if n > lo:
                     break
-                dd = _load_doc(os.path.join(self.path, _TXN, n))
-                if dd.get("dv"):
-                    prior = (
-                        [dd["dv"]]
-                        if dd.get("dv_replaces")
-                        else prior + [dd["dv"]]
-                    )
+                _fold_step(st, n, _load_doc(os.path.join(self.path, _TXN, n)))
         parts: list[InputPartition] = []
         for name, doc in docs:
             if doc.get("replaces") and not (lo == "" and name == names[0]):
@@ -1448,19 +1414,13 @@ class _TxnCDFStreamReader(_TxnStreamReader):
                     "truncated, which has no row-delta form; re-stream "
                     "from a fresh checkpoint after overwrite/compact"
                 )
-            ver = _seq_of(name)
             parts.extend(
                 _cdf_parts_for(
-                    self.path, ver, doc, prior or [],
+                    self.path, _seq_of(name), doc, st["dvs"],
                     self.columns, self.schema_json, rename=ren,
                 )
             )
-            if doc.get("dv") and prior is not None:
-                prior = (
-                    [doc["dv"]]
-                    if doc.get("dv_replaces")
-                    else prior + [doc["dv"]]
-                )
+            _fold_step(st, name, doc)
         return parts
 
     def read(self, partition):  # noqa: ANN001, ANN201
@@ -1820,39 +1780,28 @@ def _manifests(path: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, _TXN, "manifest-*.json")))
 
 
-def _visible(path: str) -> list[tuple[str, dict]]:
-    """(manifest path, doc) pairs of the readable log in snapshot
-    order: everything from the LATEST ``replaces`` marker onward (a
-    truncate commit starts a new generation; earlier manifests may
-    still be on disk awaiting vacuum but are invisible by rule). One
-    tiny json-load per manifest — driver-side metadata, not a data
-    scan."""
-    pairs = [(m, _load_doc(m)) for m in _manifests(path)]
-    cut = 0
-    for i, (_, d) in enumerate(pairs):
+def _abs(path: str, names: Iterable[str]) -> list[str]:
+    """Table-relative names (a fold's files or DV datasets) made
+    absolute, order kept."""
+    return [os.path.join(path, n) for n in names]
+
+
+def _gen_cut(docs: list[dict]) -> int:
+    """Index of the LAST ``replaces`` commit among ``docs`` (name
+    order), -1 if there is none. A truncate commit starts a new
+    generation: every earlier manifest is invisible by rule, though it
+    stays on disk until vacuum reclaims it."""
+    cut = -1
+    for i, d in enumerate(docs):
         if d.get("replaces"):
             cut = i
-    return pairs[cut:]
+    return cut
 
 
 def _visible_log(path: str) -> list[dict]:
-    """The readable manifest docs in snapshot order (see _visible)."""
-    return [d for _, d in _visible(path)]
-
-
-def _fold_entries(docs: list[dict]) -> list[dict]:
-    """Fold a manifest log into the LIVE per-file entries: each commit
-    first applies its ``removes`` (a delta commit — MERGE — atomically
-    unpublishes the files it rewrote), then adds its own files.
-    Rewrites always mint fresh uuid names, so a removed name never
-    reappears."""
-    live: dict[str, dict] = {}
-    for d in docs:
-        for r in d.get("removes", ()):
-            live.pop(r, None)
-        for e in d["entries"]:
-            live[e["name"]] = e
-    return list(live.values())
+    """The readable manifest docs in snapshot order: everything from
+    the latest ``replaces`` marker onward (`_gen_cut`)."""
+    return [d for _, d in _fold_state(path, as_of=0)["later"]]
 
 
 def _ckpt_files(path: str) -> list[str]:
@@ -1879,84 +1828,109 @@ def _merge_schema_fields(fields: dict, schema_json: str) -> None:
         fields[f.name] = StructField(f.name, f.dataType, True, f.metadata)
 
 
-def _fold_state(path: str) -> dict:
-    """The CURRENT-snapshot planning state — latest checkpoint + tail
-    fold (VERDICT r12 item 2). Without a checkpoint this is the same
-    full-log fold `_visible` performs; with one, only the manifests
-    NEWER than the checkpoint's ``through`` head are json-loaded, so a
-    long-lived log (a streaming sink committing for months) plans in
-    O(checkpoint interval) driver metadata instead of O(#commits).
-    A ``replaces`` commit in the tail starts a new generation exactly
-    as the `_visible` cut does: the checkpoint and every earlier tail
-    doc are discarded and the fold restarts at the marker. Returns::
+def _base_state(ck: dict | None = None) -> dict:
+    """The fold state a checkpoint summarizes (empty without one)."""
+    st = {
+        "entries": {e["name"]: e for e in ck["entries"]} if ck else {},
+        "dvs": list(ck["dvs"]) if ck else [],
+        "cluster_by": ck.get("cluster_by") if ck else None,
+        "fields": {},
+        "tombs": set(ck.get("tombs", ())) if ck else set(),
+        "styles": set(ck.get("styles", ())) if ck else set(),
+        "n": ck["n"] if ck else 0,
+        "head": ck["through"] if ck else "",
+        "later": [],
+    }
+    if ck and ck.get("schema"):
+        _merge_schema_fields(st["fields"], ck["schema"])
+    return st
+
+
+def _fold_step(st: dict, name: str, d: dict) -> None:
+    """Apply ONE commit (manifest ``name``, doc ``d``) to a fold state
+    in place — the only place the per-commit rules live:
+
+    * ``removes`` first (a delta commit — MERGE — atomically
+      unpublishes the files it rewrote), then its own files; rewrites
+      mint fresh uuid names, so a removed name never reappears;
+    * a ``dv_replaces`` commit (coalesce) resets the deletion-vector
+      list to its one dataset, which carries every still-relevant
+      position; any other DV commit appends its sidecar;
+    * the latest ``cluster_by`` wins; a ``schema_full`` commit
+      (column-mapping rename/drop) carries the whole logical schema,
+      so the additive schema fold restarts; tombstones, writer styles
+      and the visible-commit count accumulate."""
+    st["n"] += 1
+    st["head"] = name
+    st["styles"].add(_style_of(name))
+    for r in d.get("removes", ()):
+        st["entries"].pop(r, None)
+    for e in d["entries"]:
+        st["entries"][e["name"]] = e
+    if d.get("dv"):
+        st["dvs"] = (
+            [d["dv"]] if d.get("dv_replaces") else st["dvs"] + [d["dv"]]
+        )
+    if d.get("cluster_by") is not None:
+        st["cluster_by"] = d["cluster_by"]
+    if d.get("schema"):
+        if d.get("schema_full"):
+            st["fields"].clear()
+        _merge_schema_fields(st["fields"], d["schema"])
+    st["tombs"] |= set(d.get("schema_tomb", ()))
+
+
+def _fold_state(path: str, as_of: int | None = None) -> dict:
+    """The ONE replay of the manifest log into table state; every read
+    plans from a single call, so its files, deletion vectors and column
+    map come from the same snapshot.
+
+    The current snapshot (``as_of=None``) is the latest checkpoint plus
+    its tail (VERDICT r12 item 2): only manifests NEWER than the
+    checkpoint's ``through`` head are json-loaded, so a long-lived log
+    (a streaming sink committing for months) plans in O(checkpoint
+    interval) driver metadata instead of O(#commits). A ``replaces``
+    commit in the tail starts a new generation (`_gen_cut`): the
+    checkpoint and every earlier doc are discarded and the fold
+    restarts at the marker. Time travel (``as_of=n``) skips the
+    checkpoint and folds the first n commits of the visible log (the
+    generation from the latest ``replaces`` on); the visible commits
+    after them ride along as ``later`` for change-window readers, which
+    walk them forward with `_fold_step`. Returns::
 
         {"entries": {basename: entry}, "dvs": [rel paths],
          "cluster_by": str|list|None, "fields": {name: StructField},
          "tombs": set[str] (dropped physical column names),
          "styles": set[str], "n": visible-commit count,
-         "head": last manifest basename ("" for an empty log)}
+         "head": last folded manifest basename ("" for none),
+         "later": [(basename, doc)] (``as_of`` only)}
 
     Checkpoints are DERIVED state: a missing, stale, or concurrently
     written checkpoint only changes how much tail is folded, never the
     result (the manifest log remains the sole source of truth)."""
-    ck = _latest_ckpt(path)
-    ms = [os.path.basename(m) for m in _manifests(path)]
+    ck = _latest_ckpt(path) if as_of is None else None
     through = ck["through"] if ck else ""
-    tail = [n for n in ms if n > through]
-    docs = [(n, _load_doc(os.path.join(path, _TXN, n))) for n in tail]
-    cut = -1
-    for i, (_, d) in enumerate(docs):
-        if d.get("replaces"):
-            cut = i
+    docs = [
+        (n, _load_doc(os.path.join(path, _TXN, n)))
+        for n in (os.path.basename(m) for m in _manifests(path))
+        if n > through
+    ]
+    return _fold_docs(docs, ck, as_of)
+
+
+def _fold_docs(docs: list, ck: dict | None = None, as_of: int | None = None) -> dict:
+    """`_fold_state`'s replay of (manifest basename, doc) pairs already
+    loaded, in name order (`vacuum` folds the log it listed)."""
+    cut = _gen_cut([d for _, d in docs])
     if cut >= 0:
         ck = None  # generation cut: the checkpoint summarizes dead history
         docs = docs[cut:]
-
-    entries: dict[str, dict] = (
-        {e["name"]: e for e in ck["entries"]} if ck else {}
-    )
-    dvs: list[str] = list(ck["dvs"]) if ck else []
-    cluster_by = ck.get("cluster_by") if ck else None
-    fields: dict = {}
-    if ck and ck.get("schema"):
-        _merge_schema_fields(fields, ck["schema"])
-    tombs: set[str] = set(ck.get("tombs", ())) if ck else set()
-    styles: set[str] = set(ck.get("styles", ())) if ck else set()
-    n = ck["n"] if ck else 0
+    st = _base_state(ck)
+    if as_of is not None:
+        docs, st["later"] = docs[:as_of], docs[as_of:]
     for name, d in docs:
-        n += 1
-        styles.add(_style_of(name))
-        for r in d.get("removes", ()):
-            entries.pop(r, None)
-        for e in d["entries"]:
-            entries[e["name"]] = e
-        if d.get("dv"):
-            if d.get("dv_replaces"):
-                # a coalesce commit: its one dataset carries every
-                # still-relevant position; earlier sidecars are dead
-                dvs = [d["dv"]]
-            else:
-                dvs.append(d["dv"])
-        if d.get("cluster_by") is not None:
-            cluster_by = d["cluster_by"]
-        if d.get("schema"):
-            if d.get("schema_full"):
-                # a column-mapping commit (rename/drop): its schema IS
-                # the whole logical schema — the additive fold restarts
-                fields.clear()
-            _merge_schema_fields(fields, d["schema"])
-        tombs |= set(d.get("schema_tomb", ()))
-    head = tail[-1] if tail else (through if ck else (ms[-1] if ms else ""))
-    return {
-        "entries": entries,
-        "dvs": dvs,
-        "cluster_by": cluster_by,
-        "fields": fields,
-        "tombs": tombs,
-        "styles": styles,
-        "n": n,
-        "head": head,
-    }
+        _fold_step(st, name, d)
+    return st
 
 
 def checkpoint(path: str) -> str | None:
@@ -2180,23 +2154,20 @@ def committed_files(path: str) -> list[str]:
     return [e["name"] for e in committed_entries(path)]
 
 
+def _live_entries(path: str, st: dict) -> list[dict]:
+    """A fold's live per-file entries with ``name`` made absolute."""
+    return [
+        {**e, "name": os.path.join(path, e["name"])}
+        for e in st["entries"].values()
+    ]
+
+
 def committed_entries(path: str, as_of: int | None = None) -> list[dict]:
     """Per-file manifest entries ({name, rows, stats}) live after the
     first ``as_of`` visible manifests in snapshot order (all if None).
-    ``name`` is returned absolute. The current-snapshot case (the hot
-    planning path every scan takes) is served from checkpoint + tail;
-    ``as_of`` time travel addresses arbitrary history, so it folds the
-    raw visible log — an audit path, priced accordingly."""
-    if as_of is None:
-        return [
-            {**e, "name": os.path.join(path, e["name"])}
-            for e in _fold_state(path)["entries"].values()
-        ]
-    docs = _visible_log(path)[:as_of]
-    return [
-        {**e, "name": os.path.join(path, e["name"])}
-        for e in _fold_entries(docs)
-    ]
+    ``name`` is returned absolute. One `_fold_state` call: the current
+    snapshot from checkpoint + tail, ``as_of`` from the visible log."""
+    return _live_entries(path, _fold_state(path, as_of))
 
 
 def committed_dvs(path: str, as_of: int | None = None) -> list[str]:
@@ -2206,18 +2177,8 @@ def committed_dvs(path: str, as_of: int | None = None) -> list[str]:
     addressing a removed file become inert automatically; a
     ``replaces`` generation cut drops older DVs entirely (the rewrite
     read the masked table, so the deletes are baked into its output).
-    Current-snapshot reads come from checkpoint + tail (`_fold_state`);
-    ``as_of`` folds the raw log (audit path, same as
-    `committed_entries`)."""
-    if as_of is None:
-        return [
-            os.path.join(path, d) for d in _fold_state(path)["dvs"]
-        ]
-    dvs: list[str] = []
-    for d in _visible_log(path)[:as_of]:
-        if d.get("dv"):
-            dvs = [d["dv"]] if d.get("dv_replaces") else dvs + [d["dv"]]
-    return [os.path.join(path, d) for d in dvs]
+    The same `_fold_state` call as `committed_entries`."""
+    return _abs(path, _fold_state(path, as_of)["dvs"])
 
 
 def _mask_deleted(spark: SparkSession, df: DataFrame, dvs: list[str]) -> DataFrame:
@@ -2248,39 +2209,36 @@ def _df_from(
     files: list[str],
     schema: str,
     dvs: list[str] | None = None,
-    path: str | None = None,
+    ren: dict[str, str] | None = None,
 ) -> DataFrame:
     """Dispatch on the staged format (a table is homogeneous: its
     writer style fixes the extension); parquet scans apply any visible
-    deletion vectors (merge-on-read). With ``path``, the scan is
-    COLUMN-MAPPING aware: files hold frozen physical names, so a
-    renamed table reads under its physical schema and projects back to
-    the caller's logical names — one metadata fold, zero cost for
-    never-renamed tables."""
+    deletion vectors (merge-on-read). ``ren`` is the fold's column map
+    ({logical: physical}, `_phys_map`): files hold frozen physical
+    names, so a renamed table reads under its physical schema and
+    projects back to the caller's logical names — zero cost for
+    never-renamed tables (an empty map)."""
     if not files:
         return spark.createDataFrame([], schema)
-    ren: dict[str, str] = {}
     phys_schema = schema
     logical_names: list[str] = []
-    if path is not None:
-        ren = _phys_map(_fold_state(path)["fields"])
-        if ren:
-            lschema = (
-                schema
-                if isinstance(schema, StructType)
-                else StructType.fromDDL(schema)
-            )
-            from pyspark.sql.types import StructField
+    if ren:
+        lschema = (
+            schema
+            if isinstance(schema, StructType)
+            else StructType.fromDDL(schema)
+        )
+        from pyspark.sql.types import StructField
 
-            logical_names = [f.name for f in lschema.fields]
-            phys_schema = StructType(
-                [
-                    StructField(
-                        ren.get(f.name, f.name), f.dataType, True, f.metadata
-                    )
-                    for f in lschema.fields
-                ]
-            )
+        logical_names = [f.name for f in lschema.fields]
+        phys_schema = StructType(
+            [
+                StructField(
+                    ren.get(f.name, f.name), f.dataType, True, f.metadata
+                )
+                for f in lschema.fields
+            ]
+        )
     if files[0].endswith(".parquet"):
         df = spark.read.schema(phys_schema).parquet(*files)
         if dvs:
@@ -2318,10 +2276,11 @@ def delete_where(
     Returns ``{"files_masked": ..., "rows_deleted": ...}``."""
     import pyspark.sql.functions as F
 
-    entries = committed_entries(path)
-    if not entries:
+    st = _fold_state(path)
+    files = _abs(path, st["entries"])
+    if not files:
         return {"files_masked": 0, "rows_deleted": 0}
-    if not entries[0]["name"].endswith(".parquet"):
+    if not files[0].endswith(".parquet"):
         raise ValueError(
             f"{path}: deletion vectors need parquet row addressing "
             "(_metadata.row_index); JSONL tables delete via "
@@ -2332,7 +2291,7 @@ def delete_where(
     # column mapping: files hold physical names — scan physical, key
     # on _metadata BEFORE projecting back to logical (hidden columns
     # do not survive a projection)
-    ren = _phys_map(_fold_state(path)["fields"])
+    ren = _phys_map(st["fields"])
     lschema = StructType.fromDDL(schema) if ren else None
     read_schema = (
         schema
@@ -2344,9 +2303,7 @@ def delete_where(
             ]
         )
     )
-    scan = spark.read.schema(read_schema).parquet(
-        *[e["name"] for e in entries]
-    )
+    scan = spark.read.schema(read_schema).parquet(*files)
     keyed = scan.withColumns(
         {
             "_dv_file": F.substring_index(
@@ -2364,7 +2321,7 @@ def delete_where(
             "_dv_file",
             "_dv_pos",
         )
-    dvs = committed_dvs(path)
+    dvs = _abs(path, st["dvs"])
     if dvs:
         prior = spark.read.parquet(*dvs).select("_dv_file", "_dv_pos")
         keyed = keyed.join(prior, ["_dv_file", "_dv_pos"], "left_anti")
@@ -2429,11 +2386,14 @@ def coalesce_dvs(spark: SparkSession, path: str) -> dict:
     kept, "dropped_inert": positions dropped}``."""
     import pyspark.sql.functions as F
 
-    dvs = committed_dvs(path)
+    st = _fold_state(path)
+    dvs = _abs(path, st["dvs"])
     if not dvs:
         return {"coalesced": 0, "dv_rows": 0, "dropped_inert": 0}
-    basis = _latest_manifest(path)
-    live = sorted(_live_names(path))
+    # the basis is the head of the folded snapshot: a delete landing
+    # after the fold must conflict, not be dropped from the coalesce
+    basis = st["head"]
+    live = sorted(st["entries"])
     # one tiny row per LIVE FILE NAME — driver-side metadata scale,
     # the same cardinality every scan plan already materializes
     livedf = spark.createDataFrame([(n,) for n in live], "_dv_file string")
@@ -2503,15 +2463,16 @@ def purge_deletes(
     "rows_purged": masked rows baked in}``."""
     import pyspark.sql.functions as F
 
-    entries = committed_entries(path)
-    dvs = committed_dvs(path)
+    st = _fold_state(path)
+    entries = _live_entries(path, st)
+    dvs = _abs(path, st["dvs"])
     if not entries or not dvs:
         return {
             "files_rewritten": 0,
             "files_total": len(entries),
             "rows_purged": 0,
         }
-    basis = _latest_manifest(path)
+    basis = st["head"]  # the folded snapshot's head (see coalesce_dvs)
     counts = (
         spark.read.parquet(*dvs)
         .groupBy("_dv_file")
@@ -2536,7 +2497,9 @@ def purge_deletes(
         if entries[0]["name"].endswith(".parquet")
         else "txn_files"
     )
-    live_rows = _df_from(spark, [e["name"] for e in over], schema, dvs, path=path)
+    live_rows = _df_from(
+        spark, [e["name"] for e in over], schema, dvs, _phys_map(st["fields"])
+    )
     live_rows.write.format(fmt).mode("append").option(
         "removes",
         json.dumps(sorted(os.path.basename(e["name"]) for e in over)),
@@ -2550,14 +2513,23 @@ def purge_deletes(
     }
 
 
+def _read_fold(spark, path: str, schema: str, st: dict, ren=None) -> DataFrame:
+    """The rows of fold ``st``: its live files minus its deletion
+    vectors, under its column map unless ``ren`` overrides it."""
+    return _df_from(
+        spark, _abs(path, st["entries"]), schema, _abs(path, st["dvs"]),
+        _phys_map(st["fields"]) if ren is None else ren,
+    )
+
+
 def read_committed(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Read back ONLY manifest-listed files (staged/aborted files are
     invisible), with visible deletion vectors applied. Manifest listing
     is a driver-side metadata read — the same shape as a table format
-    reading its log, O(#manifests), not a data scan."""
-    return _df_from(
-        spark, committed_files(path), schema, committed_dvs(path), path=path
-    )
+    reading its log, O(#manifests), not a data scan. Files, deletion
+    vectors and column map come from ONE fold, so a commit landing
+    mid-plan yields the old snapshot or the new, never a mixture."""
+    return _read_fold(spark, path, schema, _fold_state(path))
 
 
 def read_snapshot(
@@ -2570,13 +2542,12 @@ def read_snapshot(
     writer style. A ``replaces`` commit (``mode("overwrite")``,
     ``compact``, ``recluster``, streaming complete-mode) starts a new
     generation: history before it is truncated, snapshot 1 is the
-    generation's first commit."""
-    return _df_from(
-        spark,
-        [e["name"] for e in committed_entries(path, as_of=as_of)],
-        schema,
-        committed_dvs(path, as_of=as_of),
-        path=path,
+    generation's first commit. Files and deletion vectors come from one
+    ``as_of`` fold; the column map comes from the current fold, because
+    the schema served is the current logical schema."""
+    return _read_fold(
+        spark, path, schema, _fold_state(path, as_of),
+        _phys_map(_fold_state(path)["fields"]),
     )
 
 
@@ -2598,22 +2569,49 @@ def read_changes(
     rewrites of earlier commits' rows, so emitting them as appends
     would double-count every surviving row (same append-only contract
     the streaming source enforces)."""
+    return _df_from(
+        spark, _append_window(path, from_snapshot, to_snapshot), schema,
+        ren=_phys_map(_fold_state(path)["fields"]),
+    )
+
+
+def _check_window(frm: int, to: int) -> None:
+    """Refuse a change window (frm, to] that is not a snapshot range."""
+    if frm < 0 or to < frm:
+        raise ValueError(
+            f"change window ({frm}, {to}] is not a snapshot range: "
+            "need 0 <= from <= to"
+        )
+
+
+def _append_window(path: str, frm: int, to: int) -> list[str]:
+    """Absolute paths of the files committed in visible snapshots
+    (frm, to] — the append-only window planner shared by
+    :func:`read_changes` and the format API's change read. A delta
+    (merge) or deletion-vector commit inside the window raises: it
+    rewrites or retracts earlier commits' rows, which appends cannot
+    express."""
+    _check_window(frm, to)
     files: list[str] = []
-    for d in _visible_log(path)[from_snapshot:to_snapshot]:
+    for _, d in _fold_state(path, as_of=frm)["later"][: to - frm]:
         if d.get("removes"):
             raise ValueError(
                 f"{path}: a delta commit (merge) lies inside the change "
                 "window — its files rewrite earlier commits' rows and "
-                "cannot be consumed as appends"
+                "cannot be consumed as appends; "
+                'option("readChangeFeed", "true") serves it as '
+                "row-level deletes + inserts"
             )
         if d.get("dv"):
             raise ValueError(
                 f"{path}: a deletion-vector commit lies inside the "
                 "change window — it retracts earlier commits' rows, "
-                "which an append-only feed cannot express"
+                "which an append-only feed cannot express; "
+                'option("readChangeFeed", "true") serves the '
+                "masked rows as deletes"
             )
-        files.extend(os.path.join(path, f) for f in d["files"])
-    return _df_from(spark, files, schema, path=path)
+        files.extend(_abs(path, d["files"]))
+    return files
 
 
 def vacuum(path: str, min_age_s: float = 24 * 3600.0) -> int:
@@ -2633,17 +2631,22 @@ def vacuum(path: str, min_age_s: float = 24 * 3600.0) -> int:
     commits never delete). Returns the number of files removed."""
     import time
 
-    removed = _reclaim_invisible(path, min_age_s)
+    log = []  # every manifest on disk, each read once
+    for m in _manifests(path):
+        try:
+            log.append((m, _load_doc(m)))
+        except OSError:
+            continue  # reclaimed by a concurrent vacuum
+    removed, log = _reclaim_invisible(path, log, min_age_s)
     cutoff = time.time() - min_age_s
 
     # files unpublished by a DELTA commit (merge_into's removes):
     # invisible since their remover landed, so the retention clock is
     # the REMOVING manifest's age — same rule as superseded generations
-    for m in _manifests(path):
+    for m, doc in log:
         try:
             if os.path.getmtime(m) > cutoff:
                 continue
-            doc = json.load(open(m))
         except OSError:
             continue
         for r in doc.get("removes", ()):
@@ -2677,9 +2680,7 @@ def vacuum(path: str, min_age_s: float = 24 * 3600.0) -> int:
     # generations awaiting their retention window are still manifested
     # and must not be mistaken for rename-crash garbage (their own
     # reclamation above removes manifest and parts together)
-    listed = {
-        f for m in _manifests(path) for f in json.load(open(m))["files"]
-    }
+    listed = {f for _, d in log for f in d["files"]}
     for f in os.listdir(path):
         if f.startswith("part-") and f not in listed:
             p = os.path.join(path, f)
@@ -2689,12 +2690,7 @@ def vacuum(path: str, min_age_s: float = 24 * 3600.0) -> int:
     # deletion-vector datasets no manifest references (a delete whose
     # commit lost its OCC race and crashed before cleanup, or a killed
     # job between the DV write and the claim) — same age gate
-    dv_listed = {
-        d.get("dv")
-        for m in _manifests(path)
-        for d in (json.load(open(m)),)
-        if d.get("dv")
-    }
+    dv_listed = {d["dv"] for _, d in log if d.get("dv")}
     dv_root = os.path.join(path, "_dv")
     if os.path.isdir(dv_root):
         for f in os.listdir(dv_root):
@@ -2710,14 +2706,17 @@ def vacuum(path: str, min_age_s: float = 24 * 3600.0) -> int:
     # anti-joining the old sidecars; clock = visibility loss, the same
     # rule as superseded generations). Time travel to pre-coalesce
     # snapshots degrades accordingly — vacuum's standing contract.
-    visible_dvs = {os.path.join("_dv", os.path.basename(d))
-                   for d in _fold_state(path)["dvs"]}
+    # All three sets come from the one listing in ``log`` (a coalesce
+    # landing mid-vacuum has superseded nothing yet), and only from its
+    # visible generation: older DVs wait for their ``replaces`` clock.
+    gen = log[max(_gen_cut([d for _, d in log]), 0):]
+    st = _fold_docs([(os.path.basename(m), d) for m, d in gen])
     superseder = None
-    for m in _manifests(path):
-        if json.load(open(m)).get("dv_replaces"):
+    for m, d in gen:
+        if d.get("dv_replaces"):
             superseder = m
     if superseder is not None and _old(superseder):
-        for rel in dv_listed - visible_dvs:
+        for rel in {d["dv"] for _, d in gen if d.get("dv")} - set(st["dvs"]):
             p = os.path.join(path, rel)
             if os.path.exists(p):
                 shutil.rmtree(p, ignore_errors=True)
@@ -2745,13 +2744,15 @@ def read_committed_between(
     manifest-level data skipping, the reason a 100 TB table with
     range-clustered files answers a point-range query by reading a
     handful of them."""
-    pcol = _phys_map(_fold_state(path)["fields"]).get(col, col)
+    st = _fold_state(path)
+    ren = _phys_map(st["fields"])
+    pcol = ren.get(col, col)
     kept = []
-    for e in committed_entries(path):
+    for e in _live_entries(path, st):
         mm = e["stats"].get(pcol)  # zone maps are keyed physical
         if mm is None or (mm[0] <= hi and lo <= mm[1]):
             kept.append(e["name"])
-    df = _df_from(spark, kept, schema, committed_dvs(path), path=path)
+    df = _df_from(spark, kept, schema, _abs(path, st["dvs"]), ren)
     return df.where(df[col].between(lo, hi))
 
 
@@ -2774,18 +2775,17 @@ def _rewrite(
     output derives from the old snapshot), so the commit raises
     :class:`ConcurrentCommitError` instead (VERDICT r11 item 2 — the
     merge-vs-compact race)."""
-    basis = _latest_manifest(path)
-    files = committed_files(path)
+    st = _fold_state(path)
     fmt = (
         "txn_parquet"
-        if files and files[0].endswith(".parquet")
+        if any(n.endswith(".parquet") for n in st["entries"])
         else "txn_files"
     )
     w = (
-        shaper(read_committed(spark, path, schema))
+        shaper(_read_fold(spark, path, schema, st))
         .write.format(fmt)
         .mode("overwrite")
-        .option("basis", basis)
+        .option("basis", st["head"])
     )
     if cluster_by:
         # a LIST means z-order clustering over several columns; writer
@@ -2850,7 +2850,8 @@ def merge_into(
     import pyspark.sql.functions as F
 
     on_cols = [on] if isinstance(on, str) else list(on)
-    entries = committed_entries(path)
+    st = _fold_state(path)
+    entries = _live_entries(path, st)
     fmt = (
         "txn_parquet"
         if entries and entries[0]["name"].endswith(".parquet")
@@ -2869,7 +2870,7 @@ def merge_into(
     from pyspark.sql.types import StringType
 
     # column mapping: zone maps are keyed by PHYSICAL name
-    _ren = _phys_map(_fold_state(path)["fields"])
+    _ren = _phys_map(st["fields"])
 
     def _pcol(c: str) -> str:
         return _ren.get(c, c)
@@ -2935,8 +2936,8 @@ def merge_into(
     # masked file does not resurrect its deleted rows; the rewrite's
     # fresh part names retire those DV rows automatically
     tdf = _df_from(
-        spark, [e["name"] for e in touched], schema, committed_dvs(path),
-        path=path,
+        spark, [e["name"] for e in touched], schema, _abs(path, st["dvs"]),
+        _ren,
     )
     cols = [f.name for f in tdf.schema.fields]
     survivors = tdf.join(
@@ -3077,13 +3078,8 @@ def table_history(spark: SparkSession, path: str) -> DataFrame:
     O(#manifests) tiny JSON loads, no data scan. ``visible`` marks the
     rows inside the current generation (after the latest ``replaces``
     cut); invisible rows are retained history awaiting vacuum."""
-    pairs = [
-        (os.path.basename(m), json.load(open(m))) for m in _manifests(path)
-    ]
-    cut = 0
-    for i, (_, d) in enumerate(pairs):
-        if d.get("replaces"):
-            cut = i
+    pairs = [(os.path.basename(m), _load_doc(m)) for m in _manifests(path)]
+    cut = _gen_cut([d for _, d in pairs])
     rows = []
     for i, (name, d) in enumerate(pairs):
         kind = (

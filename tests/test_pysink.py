@@ -2672,3 +2672,227 @@ def test_column_mapping_stream_reads_logical(spark, tmp_path):
     q.awaitTermination(120)
     rows = sorted((r.k, r.price) for b in got for r in b)
     assert rows == [(k, float(k)) for k in range(20)]
+
+
+def test_read_committed_plans_from_one_snapshot(spark, tmp_path, monkeypatch):
+    """A compact landing between two manifest folds of one read must not
+    pair the old generation's files with the new generation's (empty)
+    deletion-vector list: the read plans files, DVs and column map from
+    a single fold, so it serves the old snapshot intact (90 rows, none
+    of the deleted keys)."""
+    from mapreduceframework_cpp_spark.sources import pysink
+    from mapreduceframework_cpp_spark.sources.pysink import delete_where
+
+    register(spark)
+    t = str(tmp_path)
+    schema = "k bigint, v double"
+    spark.range(100).selectExpr(
+        "id AS k", "CAST(id AS DOUBLE) AS v"
+    ).repartitionByRange(4, "k").write.format("txn_parquet").mode(
+        "append"
+    ).save(t)
+    assert delete_where(spark, t, schema, "k < 10")["rows_deleted"] == 10
+
+    real = pysink._fold_state
+    landed = []
+
+    def fold_then_compact(path, *args, **kwargs):
+        st = real(path, *args, **kwargs)
+        if not landed:
+            landed.append(True)  # the compact's own folds pass through
+            compact(spark, t, schema)
+        return st
+
+    monkeypatch.setattr(pysink, "_fold_state", fold_then_compact)
+    keys = [r.k for r in read_committed(spark, t, schema).collect()]
+    monkeypatch.undo()
+    assert landed
+    assert sorted(keys) == list(range(10, 100))
+    # the compact did land: the new generation serves the same rows
+    assert read_committed(spark, t, schema).count() == 90
+
+
+def test_read_plan_loads_each_manifest_once(spark, tmp_path):
+    """Without a checkpoint, planning a read json-loads each of the K
+    manifests exactly once — one fold per read, not one per field."""
+    from mapreduceframework_cpp_spark.sources import pysink
+
+    register(spark)
+    t = str(tmp_path)
+    k = 4
+    for i in range(k):
+        spark.range(i * 10, i * 10 + 10).selectExpr(
+            "id AS k", "CAST(id AS DOUBLE) AS v"
+        ).coalesce(1).write.format("txn_parquet").mode("append").save(t)
+    assert len(pysink._manifests(t)) == k and not pysink._ckpt_files(t)
+    schema = "k bigint, v double"
+
+    pysink.MANIFEST_LOADS = 0
+    df = read_committed(spark, t, schema)
+    assert pysink.MANIFEST_LOADS == k
+    assert df.count() == 10 * k
+
+    pysink.MANIFEST_LOADS = 0
+    df = read_committed_between(spark, t, schema, "k", 5, 14)
+    assert pysink.MANIFEST_LOADS == k
+    assert sorted(r.k for r in df.collect()) == list(range(5, 15))
+
+
+def test_time_travel_across_rename_serves_current_names(spark, tmp_path):
+    """A snapshot from before rename_column(v -> price) reads under the
+    CURRENT logical name: the as-of fold picks the files and deletion
+    vectors, the current fold picks the column map — through both the
+    helper and option("asOf")."""
+    from mapreduceframework_cpp_spark.sources.pysink import rename_column
+
+    register(spark)
+    t = str(tmp_path)
+    spark.range(10).selectExpr(
+        "id AS k", "CAST(id * 10 AS DOUBLE) AS v"
+    ).coalesce(1).write.format("txn_parquet").mode("append").save(t)
+    rename_column(t, "v", "price")
+    spark.range(10, 20).selectExpr(
+        "id AS k", "CAST(id * 10 AS DOUBLE) AS price"
+    ).coalesce(1).write.format("txn_parquet").mode("append").save(t)
+
+    want = [(k, k * 10.0) for k in range(10)]
+    snap = read_snapshot(spark, t, "k bigint, price double", 1)
+    assert sorted((r.k, r.price) for r in snap.collect()) == want
+    fmt = spark.read.format("txn_parquet").option("asOf", 1).load(t)
+    assert fmt.columns == ["k", "price"]
+    assert sorted((r.k, r.price) for r in fmt.collect()) == want
+
+
+def test_maintenance_basis_is_the_planning_fold(spark, tmp_path, monkeypatch):
+    """coalesce_dvs and purge_deletes pin the head of the fold they
+    planned from as their commit basis: a real delete_where landing
+    right after that fold makes each lose with ConcurrentCommitError,
+    its own output cleaned up, and the interloper's delete stands."""
+    from mapreduceframework_cpp_spark.sources import pysink
+    from mapreduceframework_cpp_spark.sources.pysink import (
+        ConcurrentCommitError,
+        coalesce_dvs,
+        committed_dvs,
+        delete_where,
+        purge_deletes,
+    )
+
+    register(spark)
+    t = str(tmp_path)
+    schema = "k bigint, v double"
+    spark.range(50).selectExpr(
+        "id AS k", "CAST(id AS DOUBLE) AS v"
+    ).coalesce(2).write.format("txn_parquet").mode("append").save(t)
+    delete_where(spark, t, schema, "k = 1")
+    delete_where(spark, t, schema, "k = 2")
+    real = pysink._fold_state
+
+    def land_after_first_fold(cond):
+        landed = []
+
+        def fold(path, *args, **kwargs):
+            st = real(path, *args, **kwargs)
+            if not landed:
+                landed.append(True)  # the delete's own folds pass through
+                delete_where(spark, t, schema, cond)
+            return st
+
+        monkeypatch.setattr(pysink, "_fold_state", fold)
+        return landed
+
+    landed = land_after_first_fold("k = 3")
+    with pytest.raises(ConcurrentCommitError, match="advanced"):
+        coalesce_dvs(spark, t)
+    monkeypatch.undo()
+    assert landed
+    # the loser's dataset is gone: only the three delete sidecars remain
+    assert sorted(os.listdir(tmp_path / "_dv")) == sorted(
+        os.path.basename(d) for d in committed_dvs(t)
+    )
+    assert len(committed_dvs(t)) == 3
+    assert read_committed(spark, t, schema).count() == 47
+
+    parts = {f for f in os.listdir(t) if f.startswith("part-")}
+    landed = land_after_first_fold("k = 4")
+    with pytest.raises(Exception, match="advanced"):
+        purge_deletes(spark, t, schema, threshold=0.05)
+    monkeypatch.undo()
+    assert landed
+    # the loser's renamed parts were deleted; no commit published them
+    assert {f for f in os.listdir(t) if f.startswith("part-")} == parts
+    assert len(committed_entries(t)) == 2
+    keys = sorted(r.k for r in read_committed(spark, t, schema).collect())
+    assert keys == [k for k in range(50) if k not in (1, 2, 3, 4)]
+
+
+def test_vacuum_folds_the_log_it_listed(spark, tmp_path, monkeypatch):
+    """A coalesce landing while vacuum runs must not make vacuum treat
+    the sidecars it just superseded as dead: vacuum's visible DVs, its
+    candidates and the superseding commit all come from one listing.
+    Sidecars superseded by the older, past-retention coalesce are
+    reclaimed; the ones the fresh coalesce superseded survive."""
+    import time
+
+    from mapreduceframework_cpp_spark.sources import pysink
+    from mapreduceframework_cpp_spark.sources.pysink import (
+        coalesce_dvs,
+        committed_dvs,
+        delete_where,
+    )
+
+    register(spark)
+    t = str(tmp_path)
+    schema = "k bigint, v double"
+    spark.range(50).selectExpr(
+        "id AS k", "CAST(id AS DOUBLE) AS v"
+    ).coalesce(2).write.format("txn_parquet").mode("append").save(t)
+    delete_where(spark, t, schema, "k = 1")
+    delete_where(spark, t, schema, "k = 2")
+    first = set(committed_dvs(t))
+    assert coalesce_dvs(spark, t)["coalesced"] == 2
+    delete_where(spark, t, schema, "k = 3")
+    live = set(committed_dvs(t))  # the first coalesce's dataset + k = 3
+    assert len(live) == 2 and not live & first
+    stale = time.time() - 7200  # everything so far is two "hours" old
+    for root, dirs, files in os.walk(t):
+        for p in [root] + [os.path.join(root, f) for f in files]:
+            os.utime(p, (stale, stale))
+
+    real = pysink._reclaim_invisible
+
+    def reclaim_then_coalesce(*args, **kwargs):
+        out = real(*args, **kwargs)
+        assert coalesce_dvs(spark, t)["coalesced"] == 2
+        return out
+
+    monkeypatch.setattr(pysink, "_reclaim_invisible", reclaim_then_coalesce)
+    vacuum(t, min_age_s=3600)
+    monkeypatch.undo()
+    assert not any(os.path.exists(d) for d in first)
+    # superseded a moment ago: a reader that planned before the second
+    # coalesce may still be anti-joining these
+    assert all(os.path.isdir(d) for d in live)
+    assert read_committed(spark, t, schema).count() == 47
+
+
+def test_change_window_must_be_a_snapshot_range(spark, tmp_path):
+    """A negative start or an end before the start is refused, through
+    read_changes and through the format API (plain and change feed)."""
+    register(spark)
+    t = str(tmp_path)
+    for i in range(3):
+        spark.range(i * 5, i * 5 + 5).selectExpr(
+            "id AS k", "CAST(id AS DOUBLE) AS v"
+        ).coalesce(1).write.format("txn_parquet").mode("append").save(t)
+    schema = "k bigint, v double"
+    assert read_changes(spark, t, schema, 0, 3).count() == 15
+    for frm, to in ((-1, 2), (2, 1)):
+        with pytest.raises(ValueError, match="not a snapshot range"):
+            read_changes(spark, t, schema, frm, to)
+        for cdf in ("false", "true"):
+            with pytest.raises(Exception, match="not a snapshot range"):
+                spark.read.format("txn_parquet").option(
+                    "readChangeFeed", cdf
+                ).option("changesFrom", frm).option(
+                    "changesTo", to
+                ).load(t).count()
