@@ -13,7 +13,10 @@ The suite has grown past 200 queries, and a single line carrying every
 per-query timing outgrew the driver's tail capture in round 3
 (BENCH_r03.json recorded `parsed: null`). So the full per-query map is
 NOT on the final line: it is printed on an earlier stdout line AND
-written to BENCH_DETAIL.json next to this script for the judge.
+written to BENCH_DETAIL.json next to this script for the judge. The
+detail also records, per query, the generated classes Janino compiled
+over both runs and the time that took (``codegen``), which the
+best-of-2 figure would otherwise hide.
 
 Each query is forced end-to-end with a noop-format write (full
 computation on the executors, zero driver collection — the shape a real
@@ -270,7 +273,7 @@ def _force(df) -> None:
 
 def main() -> None:
     from mapreduceframework_cpp_spark.registry import all_queries
-    from mapreduceframework_cpp_spark.session import get_spark
+    from mapreduceframework_cpp_spark.session import codegen_counters, get_spark
 
     queries = all_queries()
     # Optional subset filter (tools/scale_audit.py's synthetic-decade
@@ -299,17 +302,26 @@ def main() -> None:
     # the min is the reproducible figure.
     from mapreduceframework_cpp_spark.operators.common import release_persisted
 
+    # Janino compiles (codegen-cache misses) are counted over BOTH runs,
+    # so the detail shows the recompilation that the best-of-2 hides.
     timings: dict[str, float] = {}
+    codegen: dict[str, dict[str, float]] = {}
     for name in headline:
         best = float("inf")
+        n0, ms0 = codegen_counters(spark)
         for _ in range(2):
             t0 = time.perf_counter()
             _force(queries[name](spark, SF_DIR))
             best = min(best, time.perf_counter() - t0)
             release_persisted()  # operator-held caches don't leak across queries
+        n1, ms1 = codegen_counters(spark)
         timings[name] = round(best, 3)
+        codegen[name] = {
+            "codegen_compiles": n1 - n0,
+            "codegen_compile_ms": round(ms1 - ms0, 1),
+        }
 
-    emit(timings, sf)
+    emit(timings, sf, codegen)
     spark.stop()
 
 
@@ -451,13 +463,19 @@ def _load_sentinel_bands() -> dict[str, tuple[float, float]] | None:
         return None
 
 
-def emit(timings: dict[str, float], sf: float | None) -> dict:
+def emit(
+    timings: dict[str, float],
+    sf: float | None,
+    codegen: dict[str, dict[str, float]] | None = None,
+) -> dict:
     """Print the two stdout lines — the full per-query record first,
     then a SHORT final line (metric/value/unit/sf/n_queries + 5 slowest)
     that the driver's tail capture can always parse (the
     one-line-with-all-timings format broke BENCH_r03.json) — and then
     write BENCH_DETAIL.json, best-effort, so an I/O failure can't
-    discard a finished run. Returns the short record (unit-tested in
+    discard a finished run. ``codegen`` (per query: ``codegen_compiles``
+    and ``codegen_compile_ms`` over both timed runs) rides in the detail
+    record only. Returns the short record (unit-tested in
     tests/test_bench_format.py)."""
     total = round(sum(timings.values()), 3)
     # Host-noise sentinels (r6): this box is a shared VM whose
@@ -494,6 +512,8 @@ def emit(timings: dict[str, float], sf: float | None) -> dict:
         "queries": timings,
         "sf": sf,
     }
+    if codegen is not None:
+        detail["codegen"] = codegen
     # stdout FIRST: a completed run's timings must survive even if the
     # detail-file write fails (read-only checkout, full disk)
     print(json.dumps(detail))

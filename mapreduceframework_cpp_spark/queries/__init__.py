@@ -64,6 +64,13 @@ PINNED = {
     "q_sink_delete_vectors": 14,
     "q_sink_checkpoint_read": 14,
     "q_sink_change_feed": 14,
+    "q_dedup_near": 14,
+    "q_dedup_clusters": 14,
+    "q_pipeline_e2e": 14,
+    "q_dedup_cluster_sizes": 14,
+    "q_dedup_incremental": 14,
+    "q_split_leakage": 14,
+    "q_dup_rate_by_source": 14,
 }
 
 registry.reorder(

@@ -19,6 +19,9 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+#: every name in decorator (definition) order; :func:`reorder` moves
+#: ``QUERIES`` but never this
+DEFINED: list[str] = []
 
 #: the repo root, where the driver drops one CORRECTNESS_rNN.json a round
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -35,6 +38,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         if name in QUERIES:
             raise ValueError(f"duplicate query registration: {name}")
         QUERIES[name] = fn
+        DEFINED.append(name)
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

@@ -275,3 +275,65 @@ def test_mover_list_needs_a_reference_from_a_host_of_the_same_width(
         "reference taken on 32 CPUs, this host has 4: no mover list"
     )
     assert other["heavy_median_ratio"] is None and other["heavy_ok"] is None
+
+
+def test_detail_carries_codegen_compiles_per_query(tmp_path, monkeypatch):
+    """Best-of-2 hides a query that recompiles its generated classes on
+    every run, so the detail record carries each query's Janino compiles
+    and compile time summed over BOTH timed runs, while the final line
+    keeps its keys."""
+    import mapreduceframework_cpp_spark.operators.common as common
+    import mapreduceframework_cpp_spark.registry as registry
+    import mapreduceframework_cpp_spark.session as session
+
+    monkeypatch.setattr(
+        bench.os.path, "abspath", lambda _: str(tmp_path / "bench.py")
+    )
+    monkeypatch.delenv("BENCH_SENTINEL_FILE", raising=False)
+    monkeypatch.delenv("BENCH_QUIET_REFERENCE_FILE", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", "q_agg_groupby,q_scan_parquet")
+
+    # a fake JVM counter: q_agg_groupby compiles 3 classes (12.5 ms) on
+    # each run, q_scan_parquet compiles 2 on its first run only
+    per_run = {"q_scan_select_cols": [(1, 1.0)], "q_agg_groupby": [(3, 12.5)] * 2,
+               "q_scan_parquet": [(2, 4.0), (0, 0.0)]}
+    counter = {"n": 0, "ms": 0.0}
+
+    def make(name):
+        def q(spark, sf_dir):
+            n, ms = per_run[name].pop(0)
+            counter["n"] += n
+            counter["ms"] += ms
+            return name
+        return q
+
+    class FakeSpark:
+        class sparkContext:
+            @staticmethod
+            def setLogLevel(_):
+                pass
+
+        @staticmethod
+        def stop():
+            pass
+
+    monkeypatch.setattr(registry, "all_queries", lambda: {n: make(n) for n in per_run})
+    monkeypatch.setattr(session, "get_spark", lambda _: FakeSpark)
+    monkeypatch.setattr(session, "codegen_counters", lambda _: (counter["n"], counter["ms"]))
+    monkeypatch.setattr(common, "release_persisted", lambda: None)
+    monkeypatch.setattr(bench, "_force", lambda df: None)
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        bench.main()
+    final = json.loads(buf.getvalue().splitlines()[-1])
+    detail = json.load(open(tmp_path / "BENCH_DETAIL.json"))
+    assert detail["codegen"] == {
+        "q_agg_groupby": {"codegen_compiles": 6, "codegen_compile_ms": 25.0},
+        "q_scan_parquet": {"codegen_compiles": 2, "codegen_compile_ms": 4.0},
+    }
+    assert set(detail["queries"]) == set(detail["codegen"])
+    assert "codegen" not in final
+    with redirect_stdout(io.StringIO()):
+        plain = bench.emit(detail["queries"], sf=detail["sf"])
+    assert set(final) == set(plain)

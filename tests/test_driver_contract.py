@@ -68,6 +68,7 @@ def test_registration_follows_verify_rotation():
     derivation must reproduce the windows the driver really ran."""
     from mapreduceframework_cpp_spark.queries import PINNED
     from mapreduceframework_cpp_spark.registry import (
+        DEFINED,
         WINDOW,
         all_oracles,
         correctness_artifacts,
@@ -82,10 +83,13 @@ def test_registration_follows_verify_rotation():
     assert rounds == sorted(rounds) and rounds[:14] == list(range(1, 15))
 
     # (a) the policy is pinned to driver history: r01-r12 derive the
-    # 50 names CORRECTNESS_r13 ran, in its row order
+    # 50 names CORRECTNESS_r13 ran, in its row order. Derived from the
+    # definition order, which PINNED (a reorder of registration) cannot
+    # move.
+    assert sorted(DEFINED) == sorted(registered)
     before_r13 = [a for a in artifacts if a[0] <= 12]
     r13 = dict(artifacts)[13]
-    assert derive_next_window(before_r13, registered, oracles)[0] == list(r13)
+    assert derive_next_window(before_r13, DEFINED, oracles)[0] == list(r13)
 
     # (b) registration leads with the derivation over every artifact
     window, unproven = derive_next_window(

@@ -194,12 +194,14 @@ def test_pairs_from_banded_degenerate_bucket_guard(spark):
 def test_pairs_from_banded_bounded_aggregation_buffer(spark):
     """VERDICT r7 scale-killer closure: the earlier guard capped emitted
     pairs but still collect_list-ed the FULL oversized bucket into one
-    aggregation buffer. Prove the bounded-buffer rewrite both ways:
+    aggregation buffer. Prove the bounded-buffer form both ways:
 
-    1. Structurally — in the optimized plan, collect_list's subtree
-       pre-filters to ``k <= max_bucket``, so no aggregation buffer can
-       exceed the cap REGARDLESS of bucket size; the oversized branch
-       carries no aggregate at all.
+    1. Structurally — in the optimized plan, the one collect_list
+       aggregate groups by (band, bucket, CASE WHEN k > max_bucket THEN
+       doc_id END): a group is either a whole bucket of at most
+       ``max_bucket`` ids or a single id of an oversized bucket, so no
+       aggregation buffer can exceed the cap REGARDLESS of bucket size.
+       The banding input is shuffled once (one (band, bucket) exchange).
     2. Behaviorally — a planted adversarial bucket (100k members, cap
        64) yields exactly linear star output with spark.sql defaults,
        where full collect-then-enumerate would buffer 100k ids and
@@ -211,22 +213,24 @@ def test_pairs_from_banded_bounded_aggregation_buffer(spark):
     tiny = spark.createDataFrame(
         [(0, 1, 1), (0, 1, 2)], "band int, bucket long, doc_id long"
     )
-    plan = (
-        _pairs_from_banded(tiny, max_bucket=64)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .treeString()
-    )
-    assert "collect_list" in plan
-    # the small-bucket aggregate input is filtered on the window count
+    qe = _pairs_from_banded(tiny, max_bucket=64)._jdf.queryExecution()
+    plan = qe.optimizedPlan().treeString()
     import re
 
-    assert re.search(r"k#\d+L? <= 64", plan), plan
-    # the star branch is aggregate-free: exactly one Aggregate carries
-    # collect_list, and every Aggregate in the plan is either that one
-    # or the final distinct (no collect over the oversized branch)
-    collects = plan.count("collect_list")
-    assert collects and plan.count("Aggregate") <= 2 + collects  # distinct + small-agg
+    aggs = [ln for ln in plan.splitlines() if "Aggregate [" in ln]
+    collects = [ln for ln in aggs if "collect_list" in ln]
+    assert len(collects) == 1, plan
+    # its third grouping key is the regime split on the window count
+    key = re.search(r"Aggregate \[band#\d+, bucket#\d+L?, (\w+#\d+L?)\]", collects[0])
+    assert key, plan
+    assert re.search(
+        rf"CASE WHEN \(k#\d+L? > 64\) THEN doc_id#\d+L? END AS {key.group(1)}", plan
+    ), plan
+    # the only other aggregate is the final distinct (no second
+    # collect over a separate oversized-bucket branch)
+    assert len(aggs) == 2, plan
+    physical = qe.executedPlan().treeString()
+    assert len(re.findall(r"hashpartitioning\(band#", physical)) == 1, physical
 
     # --- behavioral proof: adversarial hot bucket ------------------------
     n = 100_000
